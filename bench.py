@@ -41,7 +41,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
 
-    from hadoop_hive_analysis_spark.plans.registry import QUERIES
+    from hadoop_hive_analysis_spark.plans.registry import DRIVER_WINDOW, QUERIES
     from hadoop_hive_analysis_spark.session import get_spark
 
     spark = get_spark("hha-bench")
@@ -109,6 +109,8 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf,
+        # effective core count, not the SPARK_GRAFT_CPUS echo
+        "cpus": spark.sparkContext.defaultParallelism,
     }
     if errors:
         out["errors"] = errors
@@ -211,7 +213,7 @@ def main() -> None:
     # be visible in the artifact, and "0" is the proof the pack ran with
     # fresh block state throughout (advisor r16).
     out["release_residual_max"] = _release_residual_max
-    _emit(out, core_queries={n for n, s in QUERIES.items() if s.driver})
+    _emit(out, core_queries=set(DRIVER_WINDOW))
     spark.stop()
 
 
@@ -283,7 +285,8 @@ def _emit(
         # already rounded + core-restricted by the prune chain above).
         # host_speed_factor and release_residual_max ride along (judge
         # r18 item 8): every flag adjudication starts from those two
-        # numbers, so they must survive even the minimal line.
+        # numbers, so they must survive even the minimal line; so does
+        # cpus, without which no two lines are comparable.
         minimal = {
             "metric": slim["metric"],
             "value": slim["value"],
@@ -291,7 +294,7 @@ def _emit(
             "queries": slim["queries"],
             "sf": slim["sf"],
         }
-        for k in ("host_speed_factor", "release_residual_max"):
+        for k in ("host_speed_factor", "release_residual_max", "cpus"):
             if k in slim:
                 minimal[k] = slim[k]
         s = line(minimal)

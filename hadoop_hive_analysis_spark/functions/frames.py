@@ -52,9 +52,11 @@ def local_frame(
 
     Drop-in for ``spark.createDataFrame(rows, schema)`` at call sites
     whose row count is bounded by construction (driver reductions,
-    probe/query tables, static dims). The result is one partition —
-    right-sized for frames this small, and exactly what their consumers
-    (broadcast builds, tiny aggregates) want.
+    probe/query tables, static dims). Up to ``LOCAL_FRAME_MAX_ROWS``
+    rows the result is one partition — right-sized for frames this
+    small, and exactly what their consumers (broadcast builds, tiny
+    aggregates) want. Above the cap it is a plain
+    ``spark.createDataFrame`` at default width.
     """
     rows = list(rows)
     struct = _as_struct_type(spark, schema)

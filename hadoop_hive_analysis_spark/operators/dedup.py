@@ -80,19 +80,19 @@ _SHINGLE_SQL = r"""
 
 
 def _doc_shingles(
-    spark: SparkSession, sf_dir: str, bytes_per_task: int | None = None
+    spark: SparkSession, sf_dir: str, full_width: bool = False
 ) -> DataFrame:
     from ..sources.catalog import spread_small_scan
 
     # spread BEFORE the explode: the shingle transform multiplies each
     # row's CPU ~50x, and a small single-row-group documents file scans
     # as 1-2 partitions (see spread_small_scan) — measured 9 s -> <2 s
-    # for the sf1 shingle pass. ``bytes_per_task`` passes through to the
-    # width rule for consumers that RECOMPUTE this frame per branch
-    # instead of checkpointing it (doc_tfidf_cosine_pairs).
+    # for the sf1 shingle pass. ``full_width`` passes through for
+    # consumers that RECOMPUTE this frame per branch instead of
+    # checkpointing it (doc_tfidf_cosine_pairs).
     d = spread_small_scan(
         load_table(spark, sf_dir, "documents").select("doc_id", "text"),
-        bytes_per_task=bytes_per_task,
+        full_width=full_width,
     )
     return with_shingles(d, "text", 3).select("doc_id", "shingle")
 
@@ -341,10 +341,10 @@ def minhash_pairs_from_shingle_sets(
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup pairs
     (see :func:`minhash_pairs_from_shingle_sets`)."""
-    from ..sources.catalog import SPREAD_BYTES_PER_TASK, spread_small_scan
+    from ..sources.catalog import spread_small_scan
 
-    # Full-width spread (÷32 ≡ core cap at every fixture SF; identical
-    # from sf1 up): the checkpoint width is inherited by the 16-fold
+    # Full-width spread (identical to the bytes-proportional width from
+    # sf1 up): the checkpoint width is inherited by the 16-fold
     # minhash signature pass AND both array_intersect verify probes —
     # CPU-per-byte far above the spread default's ~1 s/MB baseline. The
     # r20 narrow default measured ~flat in dedicated-JVM interleaved
@@ -355,7 +355,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # clusters_bigstar 1.13 vs 1.75, family_profile 1.40 vs 1.86.
     docs = spread_small_scan(
         load_table(spark, sf_dir, "documents").select("doc_id", "text"),
-        bytes_per_task=SPREAD_BYTES_PER_TASK // 32,
+        full_width=True,
     )
     return minhash_pairs_from_shingle_sets(shingle_sets(docs))
 
@@ -424,19 +424,19 @@ def _simhash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiset of hashes per doc). At 100 TB the signature becomes a pure
     map over the corpus scan.
     """
-    from ..sources.catalog import SPREAD_BYTES_PER_TASK, spread_small_scan
+    from ..sources.catalog import spread_small_scan
 
-    # Full-width spread, NOT the r20 bytes-proportional default (÷32
-    # keeps every fixture SF at the core cap; identical from sf1 up):
-    # the byte-band self-join downstream broadcasts its build side, so
-    # the probe runs AT THIS WIDTH with work quadratic in band
-    # occupancy — the narrow default was measured 1.60× slower
-    # end-to-end at sf0.1 (2.57 → 4.11 s median, confirmed best-of-N in
-    # a second interleaved run), and a 19-wide middle ground still lost.
+    # Full-width spread, NOT the r20 bytes-proportional default
+    # (identical from sf1 up): the byte-band self-join downstream
+    # broadcasts its build side, so the probe runs AT THIS WIDTH with work
+    # quadratic in band occupancy — the narrow default was measured 1.60×
+    # slower end-to-end at sf0.1 (2.57 → 4.11 s median, confirmed
+    # best-of-N in a second interleaved run), and a 19-wide middle ground
+    # still lost.
     sets = shingle_sets(
         spread_small_scan(
             load_table(spark, sf_dir, "documents").select("doc_id", "text"),
-            bytes_per_task=SPREAD_BYTES_PER_TASK // 32,
+            full_width=True,
         )
     )
 

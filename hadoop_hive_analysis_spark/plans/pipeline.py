@@ -112,7 +112,7 @@ def corpus_clean_staged(
         workdir = tempfile.mkdtemp(prefix="hha_corpus_clean_staged_")
         atexit.register(shutil.rmtree, workdir, ignore_errors=True)
 
-    from ..sources.catalog import SPREAD_BYTES_PER_TASK, spread_small_scan
+    from ..sources.catalog import spread_small_scan
 
     # spread before the set build (r19): the single-row-group fixture
     # scans as one real task, so the tokenize→shingle→md5 pass that
@@ -120,12 +120,12 @@ def corpus_clean_staged(
     # spread; an AQE REBALANCE write was also measured — 2.45 s, the
     # extra exchange costs more than the small files save at this
     # volume). No-op at real scale (see spread_small_scan's gate).
-    # Full width (÷32), matching the fused core: the in-pack width A/B
+    # Full width, matching the fused core: the in-pack width A/B
     # measured the staged query 1.68 s full vs 2.06 s narrow (see
     # dedup_minhash_lsh).
     docs = spread_small_scan(
         load_table(spark, sf_dir, "documents").select("doc_id", "text"),
-        bytes_per_task=SPREAD_BYTES_PER_TASK // 32,
+        full_width=True,
     )
     sets_path = f"{workdir}/shingle_sets.parquet"
     write_parquet(shingle_sets(docs), sets_path)

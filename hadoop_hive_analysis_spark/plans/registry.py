@@ -8,7 +8,7 @@ expressible, an oracle SQL string DuckDB runs on the same parquet tables.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,10 +24,6 @@ class QuerySpec:
     oracle: str | None  # ANSI SQL for DuckDB; None → rows-only check
     survey_ids: str  # SURVEY.md §2 operator IDs this query covers
     bench: bool = True  # include in bench.py's headline pack
-    driver: bool = True  # expose via __spark_entry__ (the driver scores a
-    # bounded window of the registry — round 1 proved 50 entries — so the
-    # 12 *_sql duals, which re-run the exact SQL text the oracle already
-    # executes, stay pytest-only and never crowd out a unique operator)
 
 
 def _build() -> dict[str, QuerySpec]:
@@ -56,15 +52,12 @@ def _build() -> dict[str, QuerySpec]:
     )
 
     # S7 DDL twin: CREATE TABLE ... USING parquet LOCATION, then the q1a
-    # text against the catalog-qualified table. pytest-parity only as of
-    # round 3: it re-runs q1a's exact SQL, so a driver slot duplicated
-    # q1a's signal — the slot went to the text-pipeline pack.
+    # text against the catalog-qualified table.
     q["q1a_via_ddl_catalog"] = QuerySpec(
         tq.q1a_via_ddl_catalog,
         tq.SQL["q1a_top_suppliers_by_revenue"],
         "S7 (DDL external-table catalog)",
         bench=False,
-        driver=False,
     )
 
     # --- Extension packs (registered by their modules; oracle-checked
@@ -73,717 +66,116 @@ def _build() -> dict[str, QuerySpec]:
 
     q.update(extensions.build())
 
-    # --- SQL duals: same SQL text through Spark SQL (entry point 2).
-    # pytest-only (driver=False): the oracle comparison already runs this
-    # exact text in DuckDB, so a driver slot would duplicate the signal. ---
+    # --- SQL duals: same SQL text through Spark SQL (entry point 2) ---
     for name in list(tq.SQL):
         q[f"{name}_sql"] = QuerySpec(
             tq.make_sql_runner(name),
             tq.SQL[name],
             "S7 + dual of " + name,
             bench=False,
-            driver=False,
         )
     return q
 
 
-# ---------------------------------------------------------------- rotation
-# The driver scores a hard 50-slot window; per-round membership is rotated
-# so every oracle-checked entry gets a periodic driver hash (judge r8 gap:
-# 41 entries had never been scored). Each round's delta lives HERE as one
-# auditable overlay on the modules' long-run defaults; the swap set is
-# validated by scripts/rotation_plan.py (the r9 window preserves the full
-# physical-signature union and adds join:FullOuter + harness:warc, the two
-# shapes the driver had never hashed). Demoted entries stay oracle-checked
-# every round by tests/test_oracle_parity.py.
-_R9_PROMOTE = (
-    "events_merge_upsert",  # join:FullOuter — never driver-hashed shape
-    "warc_corpus_roundtrip",  # harness:warc — never driver-hashed shape
-    "grouped_stats_orders",  # A4–A6 return to the window (judge r8 item 6)
-    "embedding_quality_screen",  # non-finite guard fixed this round
-    "events_gap_fill",  # floor-division fix this round
-    "events_churn_report",
-    "events_rolling_active_users",
-    "events_daily_trend",
-    "dedup_containment",
-    "dedup_family_profile",
-    "dedup_prefix_filter_jaccard",
-    "dedup_exact_normalized",
-    "dedup_rate_by_source",
-    "dedup_ensemble_collapse",
-    "doc_bigram_lm_score",
-    "doc_quality_ecdf",
-    "doc_quality_classifier",
-    "doc_tokenize_with_vocab",
-    "corpus_collocations",
-    "doc_ngram_novelty",
-    "corpus_dedup_saturation",
-    "doc_heavy_hitters",
-    "source_token_drift",
-    "ann_pq_recall",
-    "ann_sq8_recall",  # join:LeftSemi carrier after ann_lsh_recall rests
-)
-_R9_DEMOTE = (
-    # all rested entries are redundant by physical shape in the r9 window
-    # (rotation_plan.py check) and hashed >=2 prior rounds; flagships
-    # (minhash, asof, range join, HLL, sketch) return in a later window
-    "text_quality_score",
-    "text_lang_id",
-    "dedup_exact",
-    "doc_fingerprint",
-    "dedup_minhash_lsh",
-    "contamination_ngram",
-    "pii_scrub",
-    "doc_repetition_filter",
-    "train_stratified_sample",
-    "seq_packing",
-    "corpus_filter_funnel",
-    "data_mixture_resample",
-    "pricing_summary",
-    "orders_above_customer_avg",
-    "events_hierarchical_rollup",
-    "daily_distinct_users_hll",
-    "events_asof_join",
-    "events_share_of_key_total",
-    "ann_lsh_recall",
-    "ann_ivf_recall",
-    "events_tumbling_replay",
-    "price_quantiles_sketch",
-    "events_campaign_range_join",
-    "documents_neardup_replay",
-    "duplicated_spans_topk",
-)
-
-
-# --- r10: drain the ENTIRE never-driver-hashed backlog in one window.
-# After r9 exactly 33 entries had never had a green driver look: the 32
-# backlog entries (VERDICT r9 §owed; 29 oracle-backed + bpe_merge_train /
-# bpe_segment_stats / embedding_kmeans rows-only) plus events_sessionize,
-# whose only driver look (r4) erred on the TIMESTAMP_NTZ cast fixed the
-# same round — one green row retires the last driver-visible blemish.
-# All 33 were pre-verified on a BARE session at sf0.01 (late r9, re-swept
-# r10 before this flip). The 6 r9-rested flagships (minhash, asof join,
-# campaign range join, HLL, quantile sketch, pricing_summary) return in
-# the same window per VERDICT r9 item 3. 4 + 39 + 7 keepers = 50 slots;
-# the 7 keepers preserve the physical-signature union
-# (scripts/r10_window_check.py): warc_corpus_roundtrip (harness:warc),
-# documents_dedup_replay (harness:documents), dedup_embedding_lsh (the
-# registry's ONLY FlatMapGroupsInPandas plan), dedup_collapse
-# (join:LeftAnti), events_gap_fill (join:LeftOuter), ann_sq8_recall
-# (the ann family's planned-shape carrier; the static harness:ann tag
-# rests with ann_pq_recall — its real shapes stay scored through sq8),
-# cube_orders (Expand).
-_R10_PROMOTE = (
-    # late-r9 wave, never hashed
-    "dedup_paragraphs",
-    "paragraph_scrub",
-    "doc_hybrid_search_rrf",
-    "dedup_cluster_quality",
-    "corpus_budget_select",
-    "seq_length_buckets",
-    "text_encoding_screen",
-    "events_expectations_report",
-    "events_freshness_report",
-    "bpe_merge_train",  # rows-only (pure-Python bit-exact differential in pytest)
-    "bpe_segment_stats",  # rows-only
-    # carried backlog, never hashed
-    "corpus_snapshot_diff",  # 2nd join:FullOuter carrier (merge_upsert rests)
-    "dedup_editdistance",
-    "doc_html_extract",
-    "embedding_centroid_replay",
-    "embedding_int8_quantize",
-    "embedding_kmeans",  # rows-only (quality floor is the hashed twin, r9)
-    "events_audience_overlap",
-    "events_click_purchase_join",
-    "events_conversion_funnel",
-    "events_day_bounded_agg",
-    "events_key_skew_profile",
-    "events_markov_transitions",
-    "events_null_profile",
-    "events_ohlc_bars",
-    "events_robust_outliers",
-    "events_rolling_stats",
-    "events_stream_enrich_replay",
-    "events_value_histogram",
-    "multimodal_audio_stats",
-    "multimodal_dhash_neardup",
-    "train_priority_sample",
-    "events_sessionize",  # retire the r4 err (VERDICT r9 item 4)
-    # r9-rested flagships returning (VERDICT r9 item 3)
-    "dedup_minhash_lsh",
-    "events_asof_join",
-    "events_campaign_range_join",
-    "daily_distinct_users_hll",
-    "price_quantiles_sketch",
-    "pricing_summary",
-)
-_R10_DEMOTE = (
-    # every demotion was hashed green in r9 (CORRECTNESS_r09 50/50) and
-    # is redundant by physical shape within the NEW window
-    # (r10_window_check.py re-run after this flip); parity pack
-    # q1a/b/c/q2 and the 7 shape keepers (warc_corpus_roundtrip,
-    # documents_dedup_replay, dedup_embedding_lsh, dedup_collapse,
-    # events_gap_fill, ann_sq8_recall, cube_orders) stay.
-    "text_token_stats",
-    "dedup_prefix_filter_jaccard",
-    "duplicated_spans",
-    "span_scrub",
-    "dedup_exact_normalized",
-    "dedup_rate_by_source",
-    "dedup_containment",
-    "dedup_family_profile",
-    "dedup_semantic_collapse",
-    "dedup_ensemble_collapse",
-    "decontaminate_spans",
-    "doc_token_rarity",
-    "vocab_coverage_build",
-    "doc_tokenize_with_vocab",
-    "doc_quality_ecdf",
-    "corpus_collocations",
-    "doc_bigram_lm_score",
-    "doc_quality_classifier",
-    "doc_ngram_novelty",
-    "corpus_dedup_saturation",
-    "grouped_stats_orders",
-    "events_cohort_retention",
-    "source_token_drift",
-    "doc_bm25_search",
-    "doc_heavy_hitters",
-    "embedding_kmeans_quality",
-    "embedding_quality_screen",
-    "ann_pq_recall",
-    "events_churn_report",
-    "events_rolling_active_users",
-    "events_daily_trend",
-    "events_merge_upsert",
-    "events_latest_state",
-    "events_scd2_intervals",
-    "events_stream_left_join_replay",
-    "events_session_replay",
-    "multimodal_frame_sample",
-    "events_stream_join_replay",
-    "doc_tfidf_cosine_pairs",
-)
-
-# r12 cadence rotation (executes the rotation staged for r11 — judge r9
-# item 5, re-ordered by judge r11 items 3+4). Promotes, in the staged
-# priority order, the r10-rested r9-green flagships: (1) the posting-list
-# heavies, (2) the span family, (3) the collapse family (dedup_collapse
-# itself stayed as the LeftAnti shape keeper), (4) the text-quality
-# pack, (5) events maintenance (events_gap_fill stayed as the LeftOuter
-# keeper). Demotes the 3 rows-only rows (judge r11 item 4 — each keeps
-# its bit-exact pytest differential, so the scored window becomes 50/50
-# hash-checkable) plus 19 entries hashed green in BOTH r10 and r11
-# (CORRECTNESS_r10/r11), redundant by physical shape within the new
-# window (validated by scripts/r10_window_check.py --round 12):
-# corpus_snapshot_diff's FullOuter moves to the promoted
-# events_merge_upsert; the events analytics pack rests while the events
-# maintenance pack carries the pillar.
-_R12_PROMOTE = (
-    # (1) posting-list heavies
-    "doc_bm25_search",
-    "doc_tfidf_cosine_pairs",
-    "dedup_containment",  # 10x/100x curve measured this round (SCALING.md)
-    "dedup_prefix_filter_jaccard",
-    # (2) span family
-    "duplicated_spans",
-    "span_scrub",
-    "decontaminate_spans",
-    # (3) collapse family
-    "dedup_semantic_collapse",
-    "dedup_ensemble_collapse",
-    # (4) text-quality pack
-    "doc_quality_ecdf",
-    "doc_quality_classifier",
-    "doc_bigram_lm_score",
-    "doc_token_rarity",
-    "doc_tokenize_with_vocab",
-    "vocab_coverage_build",
-    # (5) events maintenance
-    "events_latest_state",
-    "events_scd2_intervals",
-    "events_merge_upsert",
-    "events_churn_report",
-    "events_rolling_active_users",
-    "events_daily_trend",
-    "events_cohort_retention",
-)
-# r13 staging (written now so r13 is mechanical, same discipline as the
-# r11→r12 handoff): after r12 the longest-unhashed oracle-backed entries
-# are the EARLY-round packs, rested since their last green look. Promote
-# in last-hashed order: (1) the ancients — dedup_embedding_cosine (r1),
-# q1a_via_ddl_catalog + dedup_clusters + corpus_clean (r2), the r3
-# relational core (window_rank_orders, rollup_lineitem,
-# semi_join_customers, setop_nations, brand_revenue, multimodal_meta,
-# events_tumbling_window, events_top3_by_hotkey_salted), shipping_
-# priority + forecast_revenue (r4); (2) the r5-r6 pack
-# (dedup_ngram_jaccard, dedup_clusters_bigstar, corpus_clean_staged,
-# events_props_extract, ann_lsh_topk, dedup_simhash, doc_chunks,
-# train_val_split, events_pivot_by_type, multimodal_decode_stub,
-# ann_bruteforce_topk); (3) r7 leftovers as slots allow. Demote the
-# r10/r11/r12-green double-rested equivalents, re-validating the
-# signature union with scripts/r10_window_check.py --round 13. All
-# candidates stay oracle-checked every pytest run meanwhile.
-# CONCRETE VALIDATED PLAN: ROTATION_r13_PLAN.json — EXECUTED in r13 as
-# _R13_PROMOTE/_R13_DEMOTE below, extended 22/22 → 27/27 to fold in the
-# five never-driver-hashed *_sql duals (judge r12 item 2) and
-# re-simulated before applying (union preserved EXACTLY).
-_R12_DEMOTE = (
-    # rows-only by design — bit-exact pytest differentials carry them
-    # (operators/bpe.py:186,265; tests/test_vectors.py); freeing these 3
-    # slots makes CORRECTNESS_r12 50/50 hash-checkable (judge r11 item 4)
-    "embedding_kmeans",
-    "bpe_merge_train",
-    "bpe_segment_stats",
-    # double-green rest (hashed r10 AND r11); FullOuter carried by the
-    # promoted events_merge_upsert
-    "corpus_snapshot_diff",
-    "dedup_paragraphs",
-    "paragraph_scrub",
-    "dedup_editdistance",
-    "doc_html_extract",
-    "embedding_centroid_replay",
-    "embedding_int8_quantize",
-    "events_audience_overlap",
-    "events_click_purchase_join",
-    "events_conversion_funnel",
-    "events_day_bounded_agg",
-    "events_key_skew_profile",
-    "events_markov_transitions",
-    "events_null_profile",
-    "events_ohlc_bars",
-    "events_robust_outliers",
-    "events_rolling_stats",
-    "events_stream_enrich_replay",
-    "events_value_histogram",
-)
-
-# r13 cadence rotation — executes ROTATION_r13_PLAN.json (staged and
-# simulate-validated in r12, re-simulated this round after extending it
-# 22/22 → 27/27: shapes preserved EXACTLY, zero gained/lost). Promotes,
-# in last-hashed order: (1) the r1-r4 ancients (dedup_embedding_cosine,
-# q1a_via_ddl_catalog, dedup_clusters, corpus_clean, the r3 relational
-# core, shipping_priority, forecast_revenue); (2) the r5-r6 pack; (3)
-# judge r12 item 2 — the five *_sql duals that had never held a driver
-# slot (entry point 2, the reference's HiveQL surface, SURVEY §3.2):
-# each re-runs the exact oracle SQL text through spark.sql, so their
-# shapes duplicate in-window twins and cost nothing from the union.
-# All 27 promotes bare-session swept 0/27 at sf0.01 before this edit
-# (22 in the r12 session, the 5 duals this round). Demotes: the r12
-# plan's 22 (r10+r11/r12 double-green rest) plus five freshly-r12-hashed
-# entries with the strongest pytest evidence to fund the dual slots
-# (rolling_active_users + daily_trend property-tested vs pure-Python
-# replicas in r12; churn_report, token_rarity, bigram_lm_score carried
-# by their pack siblings). Keepers untouched: dedup_embedding_lsh (only
-# FlatMapGroupsInPandas carrier), warc_corpus_roundtrip +
-# documents_dedup_replay (harness semantics), events_merge_upsert
-# (join:FullOuter carrier), the 4-query parity pack.
-_R13_PROMOTE = (
-    # (1) ancients, last-hashed r1-r4
-    "dedup_embedding_cosine",
-    "q1a_via_ddl_catalog",
-    "dedup_clusters",
-    "corpus_clean",
-    "window_rank_orders",
-    "rollup_lineitem",
-    "semi_join_customers",
-    "setop_nations",
-    "brand_revenue",
-    "events_top3_by_hotkey_salted",
-    "multimodal_meta",
-    "events_tumbling_window",
-    "shipping_priority",
-    "forecast_revenue",
-    # (2) r5-r6 pack
-    "dedup_ngram_jaccard",
-    "dedup_clusters_bigstar",
-    "corpus_clean_staged",
-    "events_props_extract",
-    "ann_lsh_topk",
-    "dedup_simhash",
-    "doc_chunks",
-    "train_val_split",
-    # (3) never-driver-hashed *_sql duals (judge r12 item 2)
-    "revenue_by_region_sql",
-    "rollup_lineitem_sql",
-    "cube_orders_sql",
-    "q1a_top_suppliers_by_revenue_sql",
-    "q1c_top_dates_by_revenue_sql",
-)
-_R13_DEMOTE = (
-    # r12-staged 22: double-green rest (hashed through r12)
-    "dedup_minhash_lsh",
-    "daily_distinct_users_hll",
-    "price_quantiles_sketch",
-    "pricing_summary",
-    "doc_hybrid_search_rrf",
-    "dedup_cluster_quality",
-    "corpus_budget_select",
-    "seq_length_buckets",
-    "text_encoding_screen",
-    "train_priority_sample",
-    "multimodal_audio_stats",
-    "multimodal_dhash_neardup",
-    "events_sessionize",
-    "events_asof_join",
-    "events_campaign_range_join",
-    "events_expectations_report",
-    "events_freshness_report",
-    "dedup_collapse",
-    "events_gap_fill",
-    "ann_sq8_recall",
-    "cube_orders",
-    "doc_tfidf_cosine_pairs",
-    # +5 to fund the dual slots (fresh r12 hashes, property/pack-backed)
-    "events_rolling_active_users",
-    "events_daily_trend",
-    "events_churn_report",
-    "doc_token_rarity",
-    "doc_bigram_lm_score",
-)
-# r14 rotation — executes ROTATION_r14_PLAN.json (16/16, staged and
-# simulate-validated in the r13 session; a first draft that demoted
-# both span_scrub and decontaminate_spans would have dropped the
-# window's only ObjectHashAggregate carriers — the committed plan
-# keeps span_scrub scored and rests dedup_clusters instead, its CC
-# shape carried by the scored sibling dedup_clusters_bigstar).
-# Promotes are the longest-unhashed rested rows: multimodal_decode_stub,
-# events_pivot_by_type, ann_bruteforce_topk, the r7-r8 pack
-# (text_quality_score … seq_packing), orders_above_customer_avg. All 16
-# bare-session swept 0/16 at sf0.01 in r13. Demotes rest double-fresh
-# entries (hashed green in BOTH r12 and r13) whose shapes are carried by
-# scored siblings or promotes.
-_R14_PROMOTE = (
-    "multimodal_decode_stub",
-    "events_pivot_by_type",
-    "ann_bruteforce_topk",
-    "text_quality_score",
-    "text_lang_id",
-    "doc_fingerprint",
-    "dedup_exact",
-    "duplicated_spans_topk",
-    "contamination_ngram",
-    "pii_scrub",
-    "doc_repetition_filter",
-    "train_stratified_sample",
-    "corpus_filter_funnel",
-    "data_mixture_resample",
-    "seq_packing",
-    "orders_above_customer_avg",
-)
-_R14_DEMOTE = (
-    "duplicated_spans",
-    "decontaminate_spans",
-    "dedup_containment",
-    "dedup_prefix_filter_jaccard",
-    "doc_bm25_search",
-    "dedup_semantic_collapse",
-    "dedup_ensemble_collapse",
-    "doc_quality_classifier",
-    "doc_quality_ecdf",
-    "doc_tokenize_with_vocab",
-    "vocab_coverage_build",
-    "events_latest_state",
-    "events_scd2_intervals",
-    "events_cohort_retention",
-    "corpus_clean_staged",
-    "dedup_clusters",
-)
-
-
-# r15 rotation — executes the AMENDED ROTATION_r15_PLAN.json (20/20;
-# judge r14 items 1-2). Promotes: the 19 oracle-backed entries last
-# hashed in r11 (the r12-demoted paragraph/editdistance/html/
-# embedding-replay/events-analytics pack) PLUS dedup_semantic_guardrail
-# — never driver-hashed, and since r14 it gates every collapse, so the
-# operator that refuses deletions gets its first driver hash. The r14
-# staging note's claim that this swap leaves nothing >3 rounds unhashed
-# was WRONG (judge r14 finding): a 30-entry oracle-backed cohort is at
-# r7-r9 and 7 *_sql duals at r1 — all oracle-checked on every pytest
-# run (tests/test_oracle_parity.py), and ROTATION_r16_PLAN.json stages
-# the drain (r7-ancients + the q1b/q2 duals first). The 3
-# rows-only-by-design entries stay rested (r12 decision: keeps the
-# window 50/50 hash-checkable). Demotes: 19 of the 25 double-fresh r13
-# promotes (hashed green in BOTH r13 and r14) plus semi_join_customers,
-# whose full signature {BroadcastHashJoin, join:LeftSemi} is a strict
-# subset of the kept-scored corpus_clean (per-entry signature scan) —
-# it funds the guardrail slot. Kept scored: dedup_clusters_bigstar
-# (only star-contraction CC carrier), cube_orders_sql (entry point 2's
-# scored row + Expand), span_scrub (ObjectHashAggregate),
-# dedup_embedding_lsh (only FlatMapGroupsInPandas carrier),
-# setop_nations (LeftSemi + Generate), corpus_clean (LeftAnti+LeftSemi),
-# the harness/FullOuter keepers, the 4-query parity pack. Simulated
-# (zero shapes lost, gains harness:embedding/harness:events) and all
-# 20 promotes bare-swept 0/20 at sf0.01 before applying.
-_R15_PROMOTE = (
-    "corpus_snapshot_diff",
-    "dedup_paragraphs",
-    "paragraph_scrub",
-    "dedup_editdistance",
-    "doc_html_extract",
-    "embedding_centroid_replay",
-    "embedding_int8_quantize",
-    "events_audience_overlap",
-    "events_click_purchase_join",
-    "events_conversion_funnel",
-    "events_day_bounded_agg",
-    "events_key_skew_profile",
-    "events_markov_transitions",
-    "events_null_profile",
-    "events_ohlc_bars",
-    "events_robust_outliers",
-    "events_rolling_stats",
-    "events_stream_enrich_replay",
-    "events_value_histogram",
-    "dedup_semantic_guardrail",
-)
-_R15_DEMOTE = (
-    "dedup_embedding_cosine",
-    "q1a_via_ddl_catalog",
-    "window_rank_orders",
-    "rollup_lineitem",
-    "brand_revenue",
-    "events_top3_by_hotkey_salted",
-    "multimodal_meta",
-    "events_tumbling_window",
-    "shipping_priority",
-    "forecast_revenue",
-    "events_props_extract",
-    "ann_lsh_topk",
-    "dedup_simhash",
-    "doc_chunks",
-    "train_val_split",
-    "q1a_top_suppliers_by_revenue_sql",
-    "q1c_top_dates_by_revenue_sql",
-    "rollup_lineitem_sql",
-    "revenue_by_region_sql",
-    "semi_join_customers",
-)
-
-
-# r16 rotation — executes ROTATION_r16_PLAN.json verbatim (20/20; staged
-# and simulate-validated in r15, judge r15 item 1). Promotes: the 7
-# r7-ancients, the two never-driver-hashed reference HiveQL duals
-# q1b/q2 *_sql (Software Documentation.pdf p.2,5 — the natives demote in
-# the same swap so the exact reference SQL text holds the scored slot),
-# eda_sketch_profile (last driver look r2, pre-dating its r14 oracle-hashed
-# contract), all 6 r8-rested, and 4 of the 17 r9-rested. Demotes: the 16
-# double-fresh r14 promotes (hashed green r14 AND r15), the q1b/q2 natives
-# (duals take the slots — shapes identical by construction),
-# documents_dedup_replay (harness:documents re-carried by the promoted
-# documents_neardup_replay), dedup_ngram_jaccard (signature covered by the
-# union of kept scored entries). Post-swap residue (tooled:
-# scripts/staleness_report.py, judge-verified to match exactly): 13
-# r9-rested + 5 r1 *_sql duals = 18 entries, drained by the staged r17
-# plan. Validated: zero shapes lost, harness:ann gained; all 20 promotes
-# bare-swept 0/20 at sf0.01 (r15 session log).
-_R16_PROMOTE = (
-    "anti_join_customers",
-    "doc_tfidf_topterms",
-    "embedding_group_centroid",
-    "events_sliding_window",
-    "events_value_by_user_salted",
-    "order_priority_late_ship",
-    "revenue_by_region",
-    "q1b_top_parts_by_quantity_sql",
-    "q2_supplier_revenue_rightouter_sql",
-    "eda_sketch_profile",
-    "ann_ivf_recall",
-    "ann_lsh_recall",
-    "documents_neardup_replay",
-    "events_hierarchical_rollup",
-    "events_share_of_key_total",
-    "events_tumbling_replay",
-    "text_token_stats",
-    "doc_heavy_hitters",
-    "embedding_quality_screen",
-    "ann_pq_recall",
-)
-_R16_DEMOTE = (
-    "ann_bruteforce_topk",
-    "contamination_ngram",
-    "corpus_filter_funnel",
-    "data_mixture_resample",
-    "dedup_exact",
-    "doc_fingerprint",
-    "doc_repetition_filter",
-    "duplicated_spans_topk",
-    "events_pivot_by_type",
-    "multimodal_decode_stub",
-    "orders_above_customer_avg",
-    "pii_scrub",
-    "seq_packing",
-    "text_lang_id",
-    "text_quality_score",
-    "train_stratified_sample",
-    "q1b_top_parts_by_quantity",
-    "q2_supplier_revenue_rightouter",
-    "documents_dedup_replay",
-    "dedup_ngram_jaccard",
-)
-
-
-# r17 rotation — executes ROTATION_r17_PLAN.json verbatim (18/18; staged
-# and simulate-validated in r16, bare-swept 0/18, judge r16 item 1 and
-# judge-verified to equal the true residue exactly). Promotes: the 13
-# r9-rested oracle-backed entries plus the 5 r1 *_sql duals — the ENTIRE
-# remaining pre-r12 oracle-backed residue per scripts/staleness_report.py.
-# After this swap goes green the rested-cohort class closes permanently:
-# every oracle-backed entry holds a driver hash no older than 6 rounds,
-# maintained by the double-fresh demote cadence. Demotes: 18 of the 20
-# r15 promotes, double-fresh (hashed green r15 AND r16). Kept scored from
-# that cohort: corpus_snapshot_diff (FullOuter digest join) and
-# dedup_semantic_guardrail (the percolation guard's only scored carrier).
-# The 5 rows-only-by-design entries stay rested (r12 decision: window
-# 50/50 hash-checkable); each has a driver-hashed twin or bit-exact
-# differential.
-_R17_PROMOTE = (
-    "corpus_collocations",
-    "corpus_dedup_saturation",
-    "dedup_exact_normalized",
-    "dedup_family_profile",
-    "dedup_rate_by_source",
-    "doc_ngram_novelty",
-    "embedding_kmeans_quality",
-    "events_session_replay",
-    "events_stream_join_replay",
-    "events_stream_left_join_replay",
-    "grouped_stats_orders",
-    "multimodal_frame_sample",
-    "source_token_drift",
-    "anti_join_customers_sql",
-    "grouped_stats_orders_sql",
-    "semi_join_customers_sql",
-    "setop_nations_sql",
-    "window_rank_orders_sql",
-)
-_R17_DEMOTE = (
-    "dedup_editdistance",
-    "dedup_paragraphs",
-    "paragraph_scrub",
-    "doc_html_extract",
-    "embedding_centroid_replay",
-    "embedding_int8_quantize",
-    "events_audience_overlap",
-    "events_click_purchase_join",
-    "events_conversion_funnel",
-    "events_day_bounded_agg",
-    "events_key_skew_profile",
-    "events_markov_transitions",
-    "events_null_profile",
-    "events_ohlc_bars",
-    "events_robust_outliers",
-    "events_rolling_stats",
-    "events_stream_enrich_replay",
-    "events_value_histogram",
-)
-
-
-# r18 rotation — executes ROTATION_r18_PLAN.json verbatim (18/18; staged
-# and simulate-validated in r17, bare-swept 0/18 including the
-# never-hashed ann_ivfpq_recall, judge r17 item 1). Promotes: the IVF-PQ
-# composition takes its first driver hash (harness:ann transfers to it
-# from ann_ivf_recall) plus the first 17 (name-order tiebreak) of the
-# 27-entry r12-rested cohort — the oldest remaining after r17 drained
-# everything pre-r12. Demotes: 18 of the 20 r16 promotes, double-fresh
-# (hashed green r16 AND r17); kept scored from that cohort as sole
-# shape carriers: q2_supplier_revenue_rightouter_sql (join:RightOuter)
-# and documents_neardup_replay (harness:documents). Retires flat
-# ann_pq_recall's driver slot — r17's one perf-weak entry (corpus-
-# proportional shortlist; IVF-PQ is the serving path at scale). The 10
-# r12 entries left behind drain in the staged r19 plan (cohort 27 >
-# one swap's 17 shape-safe demote slots, so the drain spans two rounds
-# by construction).
-_R18_PROMOTE = (
-    "ann_ivfpq_recall",
-    "ann_sq8_recall",
-    "corpus_budget_select",
-    "cube_orders",
-    "daily_distinct_users_hll",
-    "dedup_cluster_quality",
-    "dedup_collapse",
-    "dedup_minhash_lsh",
-    "doc_bigram_lm_score",
-    "doc_hybrid_search_rrf",
-    "doc_tfidf_cosine_pairs",
-    "doc_token_rarity",
-    "events_asof_join",
-    "events_campaign_range_join",
-    "events_churn_report",
-    "events_daily_trend",
-    "events_expectations_report",
-    "events_freshness_report",
-)
-_R18_DEMOTE = (
-    "ann_ivf_recall",
-    "ann_lsh_recall",
-    "ann_pq_recall",
-    "anti_join_customers",
-    "doc_heavy_hitters",
-    "doc_tfidf_topterms",
-    "eda_sketch_profile",
-    "embedding_group_centroid",
-    "embedding_quality_screen",
-    "events_hierarchical_rollup",
-    "events_share_of_key_total",
-    "events_sliding_window",
-    "events_tumbling_replay",
-    "events_value_by_user_salted",
-    "order_priority_late_ship",
-    "q1b_top_parts_by_quantity_sql",
-    "revenue_by_region",
-    "text_token_stats",
-)
-
-
-def _rotate(q: dict[str, QuerySpec]) -> dict[str, QuerySpec]:
-    from dataclasses import replace
-
-    for promote, demote in (
-        (_R9_PROMOTE, _R9_DEMOTE),
-        (_R10_PROMOTE, _R10_DEMOTE),
-        (_R12_PROMOTE, _R12_DEMOTE),
-        (_R13_PROMOTE, _R13_DEMOTE),
-        (_R14_PROMOTE, _R14_DEMOTE),
-        (_R15_PROMOTE, _R15_DEMOTE),
-        (_R16_PROMOTE, _R16_DEMOTE),
-        (_R17_PROMOTE, _R17_DEMOTE),
-        (_R18_PROMOTE, _R18_DEMOTE),
-    ):
-        for name in promote:
-            if q[name].driver:
-                raise RuntimeError(f"rotation: {name} already driver-visible")
-            q[name] = replace(q[name], driver=True)
-        for name in demote:
-            if not q[name].driver:
-                raise RuntimeError(f"rotation: {name} already rested")
-            q[name] = replace(q[name], driver=False)
-    return q
-
-
-QUERIES: dict[str, QuerySpec] = _rotate(_build())
-
-# The driver scores a bounded window of the registry (50 entries, proven
-# round 1). Exceeding it would SILENTLY push trailing queries out of the
-# scored window — fail loudly at import instead. New operators beyond the
-# cap register as pytest-parity entries (driver=False).
+# ---------------------------------------------------------- driver window
+# The driver scores a bounded window of the registry (50 entries).
+# DRIVER_WINDOW is that window, in registry order, and the only place it
+# is decided; every other entry is still oracle-checked by
+# tests/test_oracle_parity.py. To change the window, swap names here and
+# run scripts/rotation_plan.py before and after to compare the physical
+# shapes the driver hashes.
 DRIVER_SLOT_CAP = 50
-_n_driver = sum(1 for s in QUERIES.values() if s.driver)
-if _n_driver > DRIVER_SLOT_CAP:  # not `assert` — python -O would strip it
-    raise RuntimeError(
-        f"{_n_driver} driver-visible registry entries exceed the driver's "
-        f"{DRIVER_SLOT_CAP}-slot scored window; demote lower-signal entries "
-        "to driver=False instead of silently dropping trailing coverage"
-    )
+DRIVER_WINDOW: tuple[str, ...] = (
+    "q1a_top_suppliers_by_revenue",
+    "q1c_top_dates_by_revenue",
+    "dedup_minhash_lsh",
+    "span_scrub",
+    "dedup_exact_normalized",
+    "dedup_rate_by_source",
+    "dedup_family_profile",
+    "dedup_cluster_quality",
+    "dedup_embedding_lsh",
+    "dedup_collapse",
+    "dedup_clusters_bigstar",
+    "dedup_semantic_guardrail",
+    "corpus_clean",
+    "doc_token_rarity",
+    "corpus_collocations",
+    "doc_bigram_lm_score",
+    "doc_ngram_novelty",
+    "corpus_dedup_saturation",
+    "doc_tfidf_cosine_pairs",
+    "corpus_snapshot_diff",
+    "cube_orders",
+    "setop_nations",
+    "grouped_stats_orders",
+    "daily_distinct_users_hll",
+    "doc_hybrid_search_rrf",
+    "corpus_budget_select",
+    "source_token_drift",
+    "warc_corpus_roundtrip",
+    "embedding_kmeans_quality",
+    "ann_sq8_recall",
+    "ann_ivfpq_recall",
+    "events_asof_join",
+    "events_churn_report",
+    "events_freshness_report",
+    "events_expectations_report",
+    "events_daily_trend",
+    "events_merge_upsert",
+    "events_campaign_range_join",
+    "events_stream_join_replay",
+    "events_stream_left_join_replay",
+    "documents_neardup_replay",
+    "events_session_replay",
+    "multimodal_frame_sample",
+    "window_rank_orders_sql",
+    "cube_orders_sql",
+    "semi_join_customers_sql",
+    "anti_join_customers_sql",
+    "setop_nations_sql",
+    "grouped_stats_orders_sql",
+    "q2_supplier_revenue_rightouter_sql",
+)
+
+
+def check_driver_window(window: tuple[str, ...], names: Iterable[str]) -> None:
+    """Raise unless ``window`` is DRIVER_SLOT_CAP distinct names in ``names``.
+
+    A window that is short or over the cap would silently shrink or push
+    trailing entries out of the scored window, and a misspelt name would
+    silently drop one — fail loudly at import instead (not ``assert``:
+    ``python -O`` strips it).
+    """
+    problems = []
+    dupes = sorted({n for n in window if window.count(n) > 1})
+    if dupes:
+        problems.append(f"duplicate names {dupes}")
+    unknown = sorted(set(window) - set(names))
+    if unknown:
+        problems.append(f"unknown names {unknown}")
+    if len(window) != DRIVER_SLOT_CAP:
+        problems.append(
+            f"{len(window)} entries for the driver's {DRIVER_SLOT_CAP}-slot "
+            "scored window"
+        )
+    if problems:
+        raise RuntimeError("DRIVER_WINDOW: " + "; ".join(problems))
+
+
+QUERIES: dict[str, QuerySpec] = _build()
+check_driver_window(DRIVER_WINDOW, QUERIES)
 
 
 def query_map() -> dict[str, QueryFn]:
-    return {name: spec.fn for name, spec in QUERIES.items() if spec.driver}
+    return {
+        name: spec.fn for name, spec in QUERIES.items() if name in DRIVER_WINDOW
+    }
 
 
 def oracle_sql_map() -> dict[str, str]:
     return {
         name: spec.oracle
         for name, spec in QUERIES.items()
-        if spec.oracle and spec.driver
+        if spec.oracle and name in DRIVER_WINDOW
     }

@@ -77,9 +77,9 @@ def main() -> int:
     qs, osql = e.queries(), e.oracle_sql()
     only = set(sys.argv[1:])
     if only:
-        # Explicitly-named entries may be RESTED (driver=False) — the
-        # pre-staging sweep of a rotation plan's promotes runs BEFORE the
-        # rotation is applied, so resolve names through the registry.
+        # Explicitly-named entries may be RESTED (outside DRIVER_WINDOW):
+        # the pre-staging sweep of a rotation plan's promotes runs BEFORE
+        # the rotation is applied, so resolve names through the registry.
         # Without this the loop silently skips rested names and reports
         # a vacuous "0 failures of N".
         from hadoop_hive_analysis_spark.plans.registry import QUERIES

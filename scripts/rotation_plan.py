@@ -14,8 +14,7 @@ then reports:
   (their signal is invisible to the driver);
 - DEMOTION candidates: scored entries whose entire signature is covered
   by the UNION of the other scored entries (their physical signal is
-  redundant at the driver boundary — rotation comments should name the
-  covering queries, and this report checks that the claim still holds).
+  redundant at the driver boundary).
 
 Signatures are a deliberately coarse lens: they capture the PHYSICAL
 shape (what Catalyst actually plans), not the semantic contract — a
@@ -23,6 +22,10 @@ human still decides which redundant-by-shape query carries semantics
 worth scoring (e.g. q1a vs pricing_summary). Harness-style entries that
 execute work at build time (streaming replays, iterative fits, the WARC
 round trip) are tagged statically instead of planned.
+
+To check a window edit, run it before and after editing
+``registry.DRIVER_WINDOW`` and compare ``driver_signature_union``: a
+shape that drops out of the union is no longer hashed by the driver.
 
 Usage: python scripts/rotation_plan.py [--json out.json]
 """
@@ -80,7 +83,7 @@ def signature(name, spec, spark) -> set[str]:
 
 
 def main() -> None:
-    from hadoop_hive_analysis_spark.plans.registry import QUERIES
+    from hadoop_hive_analysis_spark.plans.registry import DRIVER_WINDOW, QUERIES
     from hadoop_hive_analysis_spark.session import get_spark
 
     spark = get_spark("hha-rotation-plan")
@@ -92,10 +95,8 @@ def main() -> None:
             continue  # duals re-run oracle text; never rotation targets
         sigs[name] = signature(name, spec, spark)
 
-    scored = {n for n in sigs if QUERIES[n].driver}
-    staged = {
-        n for n in sigs if not QUERIES[n].driver and QUERIES[n].oracle
-    }
+    scored = {n for n in sigs if n in DRIVER_WINDOW}
+    staged = {n for n in sigs if n not in DRIVER_WINDOW and QUERIES[n].oracle}
     driver_union: set[str] = set()
     for n in scored:
         driver_union |= sigs[n]

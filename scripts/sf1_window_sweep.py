@@ -462,7 +462,7 @@ def _host_speed_factor(results: dict) -> float | None:
 def main() -> int:
     import duckdb
 
-    from hadoop_hive_analysis_spark.plans.registry import QUERIES
+    from hadoop_hive_analysis_spark.plans.registry import DRIVER_WINDOW, QUERIES
     from hadoop_hive_analysis_spark.session import get_spark
 
     con = duckdb.connect()
@@ -504,8 +504,7 @@ def main() -> int:
     unknown = sorted(n for n in only if n not in QUERIES)
     if unknown:
         raise SystemExit(f"unknown registry entries: {unknown}")
-    names = [n for n, s in QUERIES.items()
-             if (n in only if only else s.driver)]
+    names = [n for n in QUERIES if n in (only or DRIVER_WINDOW)]
     if not only:
         # The engine-walled big-output class stays in the sweep even
         # when rotation rests its members (judge r16 item 6): their

@@ -75,7 +75,7 @@ def main() -> int:
     ap.add_argument("--json", dest="json_out", help="write report as JSON")
     args = ap.parse_args()
 
-    from hadoop_hive_analysis_spark.plans.registry import QUERIES
+    from hadoop_hive_analysis_spark.plans.registry import DRIVER_WINDOW, QUERIES
 
     last = load_history()
     cur_round = max(last.values())
@@ -85,7 +85,7 @@ def main() -> int:
         rows.append(
             {
                 "name": name,
-                "driver": spec.driver,
+                "driver": name in DRIVER_WINDOW,
                 "oracle": spec.oracle is not None,
                 "last_green": last.get(name),
             }
@@ -117,7 +117,7 @@ def main() -> int:
     print(f"registry entries: {len(rows)}; latest scored round: r{cur_round}")
     scored = [r for r in rows if r["driver"]]
     rested = [r for r in rows if not r["driver"]]
-    print(f"scored (driver=True): {len(scored)}; rested: {len(rested)}")
+    print(f"scored (in DRIVER_WINDOW): {len(scored)}; rested: {len(rested)}")
 
     report: dict = {"latest_round": cur_round}
     report["rested_histogram"] = histogram(
@@ -135,10 +135,10 @@ def main() -> int:
         unknown = (promote | demote) - set(QUERIES)
         if unknown:
             errs.append(f"unknown entries: {sorted(unknown)}")
-        bad_p = [n for n in promote if n in QUERIES and QUERIES[n].driver]
+        bad_p = [n for n in promote if n in DRIVER_WINDOW]
         if bad_p:
             errs.append(f"promotes already scored: {sorted(bad_p)}")
-        bad_d = [n for n in demote if n in QUERIES and not QUERIES[n].driver]
+        bad_d = [n for n in demote if n in QUERIES and n not in DRIVER_WINDOW]
         if bad_d:
             errs.append(f"demotes already rested: {sorted(bad_d)}")
         if len(promote) != len(demote):

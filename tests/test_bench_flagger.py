@@ -167,9 +167,9 @@ def test_driver_scored_names_survive_stdout_pruning(tmp_path, capsys):
     # name in the timings must survive — staged/pytest-only entries drop
     # first. Uses the real registry so a future rotation that pushes the
     # core set past the window fails here, not silently at the driver.
-    from hadoop_hive_analysis_spark.plans.registry import QUERIES
+    from hadoop_hive_analysis_spark.plans.registry import DRIVER_WINDOW, QUERIES
 
-    core = {n for n, s in QUERIES.items() if s.driver}
+    core = set(DRIVER_WINDOW)
     benched = {n for n, s in QUERIES.items() if s.bench}
     timings = {n: 1.2345 for n in benched | core}
     out = {

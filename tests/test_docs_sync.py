@@ -11,7 +11,7 @@ from __future__ import annotations
 import os
 import re
 
-from hadoop_hive_analysis_spark.plans.registry import QUERIES
+from hadoop_hive_analysis_spark.plans.registry import DRIVER_WINDOW, QUERIES
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -24,10 +24,10 @@ def _live_counts() -> dict[str, int]:
         "operators": len(ops),
         "duals": len(duals),
         "oracles": sum(1 for n in ops if QUERIES[n].oracle),
-        "driver": sum(1 for s in QUERIES.values() if s.driver),
+        "driver": sum(1 for n in QUERIES if n in DRIVER_WINDOW),
         "benched": sum(1 for s in QUERIES.values() if s.bench),
         "driver_hashable": sum(
-            1 for s in QUERIES.values() if s.driver and s.oracle
+            1 for n, s in QUERIES.items() if n in DRIVER_WINDOW and s.oracle
         ),
     }
 

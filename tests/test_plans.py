@@ -189,6 +189,37 @@ def test_registry_driver_window_exactly_full():
     assert len(oracle_sql_map()) == DRIVER_SLOT_CAP
 
 
+def test_driver_maps_follow_declared_window_order():
+    from hadoop_hive_analysis_spark.plans.registry import (
+        DRIVER_WINDOW,
+        oracle_sql_map,
+        query_map,
+    )
+
+    assert tuple(query_map()) == DRIVER_WINDOW
+    assert tuple(oracle_sql_map()) == DRIVER_WINDOW
+
+
+@pytest.mark.parametrize(
+    "bad, why",
+    [
+        (lambda w: w[:-1] + (w[0],), "duplicate"),
+        (lambda w: w[:-1] + ("no_such_query",), "unknown"),
+        (lambda w: w[:-1], "49 entries"),
+    ],
+)
+def test_driver_window_check_rejects_bad_windows(bad, why):
+    from hadoop_hive_analysis_spark.plans.registry import (
+        DRIVER_WINDOW,
+        QUERIES,
+        check_driver_window,
+    )
+
+    check_driver_window(DRIVER_WINDOW, QUERIES)  # the declared one passes
+    with pytest.raises(RuntimeError, match=why):
+        check_driver_window(bad(DRIVER_WINDOW), QUERIES)
+
+
 def test_centroid_aggregates_map_side_before_one_exchange(plans):
     # Element-wise vector aggregation must collapse to |groups| x DIM rows
     # per map task (partial HashAggregate) before its single exchange on

@@ -60,7 +60,9 @@ def test_spread_width_is_bytes_proportional(spark, sf_dir):
     """r20: the spread width follows input bytes (SPREAD_BYTES_PER_TASK
     per task, capped at the core count) — a tiny table must not fan out
     to full width, where per-task fixed cost dominates the ~50 ms of
-    real work each task would carry."""
+    real work each task would carry. ``full_width=True`` spreads to the
+    core count. The width is only observable when the gate fires; when
+    it does not, the frame comes back unchanged."""
     from hadoop_hive_analysis_spark.sources.catalog import (
         SPREAD_BYTES_PER_TASK,
         _scan_parallelism,
@@ -70,9 +72,11 @@ def test_spread_width_is_bytes_proportional(spark, sf_dir):
     df = spark.read.parquet(path)
     _, _, total_bytes = _scan_parallelism(df.inputFiles())
     cores = spark.sparkContext.defaultParallelism
-    want = min(cores, max(1, -(-total_bytes // SPREAD_BYTES_PER_TASK)))
-    out = spread_small_scan(df)
-    assert out.rdd.getNumPartitions() == want
+    narrow = min(cores, max(1, -(-total_bytes // SPREAD_BYTES_PER_TASK)))
     # scale-honest cap: a table of >= cores x SPREAD_BYTES_PER_TASK
     # would spread to exactly the core count (the pre-r20 behavior)
-    assert want <= cores
+    assert narrow <= cores
+    for full_width, want in ((False, narrow), (True, cores)):
+        out = spread_small_scan(df, full_width=full_width)
+        if out is not df:  # the gate fired
+            assert out.rdd.getNumPartitions() == want, full_width

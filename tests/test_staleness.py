@@ -3,10 +3,10 @@
 Round 14's judge caught a rotation plan whose prose staleness claim was
 false. ``scripts/staleness_report.py`` derives the claims from the
 committed ``CORRECTNESS_r*.json`` history; these tests pin that the staged
-r19 plan (a) is a valid balanced swap against the live registry — which
-already carries the executed r18 overlay — and (b) its claims hold by
-recomputation: every promote is either never-driver-hashed (the staged
-bpe_quality_floor getting its first hash) or a member of the OLDEST
+r19 plan (a) is a valid balanced swap against the live window
+(``registry.DRIVER_WINDOW``, the executed r18 window) and (b) its claims
+hold by recomputation: every promote is either never-driver-hashed (the
+staged bpe_quality_floor getting its first hash) or a member of the OLDEST
 rested oracle-backed cohort (the 10 r12 leftovers the r18 plan named and
 deferred), and after the swap the oldest remaining cohort is exactly the
 16-entry r13 cohort (≤6 rounds old at r19, draining in the r20 plan) —
@@ -18,7 +18,7 @@ from __future__ import annotations
 import json
 import os
 
-from hadoop_hive_analysis_spark.plans.registry import QUERIES
+from hadoop_hive_analysis_spark.plans.registry import DRIVER_WINDOW, QUERIES
 from scripts.staleness_report import load_history
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -59,9 +59,9 @@ def test_r19_plan_is_a_valid_balanced_swap():
     assert len(promote) == len(demote), "window must stay at the slot cap"
     unknown = (promote | demote) - set(QUERIES)
     assert not unknown, f"plan names unknown entries: {sorted(unknown)}"
-    already_scored = [n for n in promote if QUERIES[n].driver]
+    already_scored = [n for n in promote if n in DRIVER_WINDOW]
     assert not already_scored, f"promotes already scored: {already_scored}"
-    already_rested = [n for n in demote if not QUERIES[n].driver]
+    already_rested = [n for n in demote if n not in DRIVER_WINDOW]
     assert not already_rested, f"demotes already rested: {already_rested}"
 
 
@@ -75,7 +75,7 @@ def test_r19_promotes_drain_the_oldest_cohort():
     oldest = min(
         last[n]
         for n, s in QUERIES.items()
-        if s.oracle is not None and not s.driver and n in last
+        if s.oracle is not None and n not in DRIVER_WINDOW and n in last
     )
     for n in plan["promote"]:
         assert QUERIES[n].oracle is not None, f"{n} not oracle-backed"
@@ -92,7 +92,7 @@ def test_r19_post_swap_leftover_is_exactly_the_r13_cohort():
     plan = _plan()
     last = load_history()
     post_scored = (
-        {n for n, s in QUERIES.items() if s.driver} - set(plan["demote"])
+        set(DRIVER_WINDOW) - set(plan["demote"])
     ) | set(plan["promote"])
     oracle_backed = {n for n, s in QUERIES.items() if s.oracle is not None}
     oldest = min(last[n] for n in oracle_backed - post_scored if n in last)
