@@ -44,7 +44,12 @@ def main() -> None:
     from hadoop_hive_analysis_spark.plans.registry import DRIVER_WINDOW, QUERIES
     from hadoop_hive_analysis_spark.session import get_spark
 
-    spark = get_spark("hha-bench")
+    # The pack runs ~3500 stages; cpu_s sums every stage the UI store
+    # keeps, and its default of 1000 would drop the pack's first part.
+    spark = get_spark(
+        "hha-bench",
+        extra_conf={"spark.ui.retainedStages": "100000", "spark.ui.retainedJobs": "100000"},
+    )
     spark.sparkContext.setLogLevel("ERROR")
 
     # Warm-up: touch the fact table so JVM/codegen/file-index costs don't
@@ -568,7 +573,7 @@ def _regressions_vs_prior(timings: dict[str, float], sf: float) -> dict:
     # plan: at ~0.3 s a single extra GC pause or task-launch hiccup is a
     # 30%+ "regression". doc_fingerprint (0.9 s committed, improving
     # round-over-round) tripped the flagger twice on exactly this noise
-    # (r5, r7 — adjudicated via scripts/ab_fingerprint.py both times),
+    # (r5, r7 — adjudicated by an interleaved A/B both times),
     # so queries where BOTH sides of the comparison sit under the floor
     # are exempt from per-name flagging; they remain in the artifact's
     # timings and in the pack median, so a pack-wide slowdown still
@@ -617,6 +622,7 @@ def _executor_metrics(spark) -> dict:
         peak = max(peak, pm.get("JVMHeapMemory", 0) + pm.get("JVMOffHeapMemory", 0))
     return {
         "cpu_s": round(cpu_ns / 1e9, 2),
+        "cpu_s_scope": "all_stages",
         "peak_jvm_mem_mb": round(peak / 1e6, 1),
     }
 

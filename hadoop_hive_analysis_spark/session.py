@@ -33,7 +33,7 @@ class ReleaseResult(NamedTuple):
 # level: per-row on-heap objects thrash the GC during downstream sorts
 # and — because localCheckpoint blocks are freed asynchronously by the
 # ContextCleaner — ACCUMULATE across queries sharing one JVM. Measured
-# twice: the r8 tfidf A/B (scripts/ab_tfidf_cosine.py — back-to-back
+# twice: the r8 tfidf A/B (SCALING.md, doc_tfidf_cosine_pairs — back-to-back
 # deserialized runs degrade 15.3→8.7→18.1 s in one 8 GiB JVM; serialized
 # levels them) and an r15 sf1 mini-pack A/B (6 dedup queries × 3 reps,
 # one JVM, interleaved vs the prior tree: serialized 131 s total vs

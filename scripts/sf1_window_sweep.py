@@ -17,7 +17,7 @@ copies, following TPC-H's scaling model:
   keys, so referential structure and per-key cardinalities are
   preserved (runtimes scale linearly, join fan-outs don't explode);
 - documents: copy k rewrites every whitespace token t -> t||'q{k}'
-  (the scaling_minhash shingle-bijection trick): each copy reproduces
+  (the shingle-bijection rename scripts/scale.py also uses): each copy reproduces
   the base corpus's near-dup structure in a disjoint shingle universe,
   so pair counts grow EXACTLY linearly instead of quadratically across
   identical copies — and the df-cap / posting-list shapes stay
@@ -40,7 +40,7 @@ pure engine differential at 10x cardinality.
 
 Usage:
     python scripts/sf1_window_sweep.py [names...]   # default: all 50
-Env: HHA_SF1_DIR (default /tmp/hha_sf1), HHA_SCALE_HEAP (default 12g).
+Env: HHA_SF1_DIR (default /tmp/hha_sf1). The driver heap is 12g.
 DuckDB oracle results are cached under $HHA_SF1_DIR/oracle_cache keyed
 by (sql text, fixture bytes) — see the cache block above main(); the
 Spark side always executes.
@@ -475,9 +475,8 @@ def main() -> int:
 
     from hadoop_hive_analysis_spark.session import release_cached_blocks
 
-    heap = os.environ.get("HHA_SCALE_HEAP", "12g")
     spark = get_spark(
-        "hha-sf1-window-sweep", extra_conf={"spark.driver.memory": heap}
+        "hha-sf1-window-sweep", extra_conf={"spark.driver.memory": "12g"}
     )
     spark.sparkContext.setLogLevel("ERROR")
 
