@@ -30,11 +30,11 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import (
     MERSENNE_31,
-    h31,
+    h31_spark_sql,
     h31_sql,
     h64,
+    h64_spark_sql,
     h64_sql,
-    minhash_expr,
     minhash_params,
     minhash_sql,
 )
@@ -235,7 +235,29 @@ def shingle_sets(docs: DataFrame) -> DataFrame:
     t = docs.withColumn("_toks", tokens("text")).filter(F.size("_toks") >= 3)
     return t.select(
         "doc_id", F.array_distinct(shingles("_toks", 3)).alias("sarr")
-    ).withColumn("harr", F.transform("sarr", lambda s: h31(s)))
+    ).selectExpr("doc_id", "sarr", f"transform(sarr, s -> {h31_spark_sql('s')}) AS harr")
+
+
+def minhash_sig_sql(harr: str) -> list[str]:
+    """The NUM_HASHES signature components over a hash-array column, as
+    Spark SQL text: ``array_min(transform(harr, h -> (a_j·h + b_j) mod
+    P))`` with the same ``minhash_sql`` template the DuckDB oracle uses."""
+    return [
+        f"array_min(transform({harr}, h -> {minhash_sql('h', a, b)}))"
+        for a, b in minhash_params(NUM_HASHES)
+    ]
+
+
+def lsh_bands_sql(sig: list[str]) -> str:
+    """``array<struct<band int, band_sig string>>`` over NUM_HASHES
+    signature expressions, as Spark SQL text: band ``i`` keys on the
+    comma-joined components ``i·BAND_SIZE … i·BAND_SIZE + BAND_SIZE-1``."""
+    structs = []
+    for band in range(NUM_HASHES // BAND_SIZE):
+        members = sig[band * BAND_SIZE : (band + 1) * BAND_SIZE]
+        key = ", ".join(f"CAST({m} AS STRING)" for m in members)
+        structs.append(f"named_struct('band', {band}, 'band_sig', concat_ws(',', {key}))")
+    return f"array({', '.join(structs)})"
 
 
 def minhash_pairs_from_shingle_sets(
@@ -249,11 +271,17 @@ def minhash_pairs_from_shingle_sets(
     (harr, h → (a_j·h + b_j) mod P))`` — the same expression shape the
     streaming twin (``streaming.dedup.with_minhash_bands``) runs
     stateless, and bit-identical to the historical explode+groupBy(min)
-    form (min over the same distinct-shingle set). Restructured in r19:
-    the exploded shingle table, its 16-min groupBy SHUFFLE, and the
-    separate cardinality aggregation are all gone — signatures and
-    set sizes are map-side facts of the set row. Banding: 4 bands of 4
-    rows; candidates share ≥1 band signature. For planted dups (j≈0.98)
+    form (min over the same distinct-shingle set). Since r19 there is no
+    exploded shingle table, no 16-min groupBy SHUFFLE and no separate
+    cardinality aggregation — signatures and set sizes are map-side
+    facts of the set row. The 16 folds and the 4 band keys are two
+    Spark-SQL ``selectExpr`` calls (:func:`minhash_sig_sql`,
+    :func:`lsh_bands_sql`; text spliced from integer constants only),
+    not a Column-DSL tree built node by node over py4j: building the
+    operator went from 2,796 py4j commands to 665 (held under 1,000 by
+    tests/test_hash_templates.py), driver time a small corpus pays on
+    every statement. Banding: 4 bands of 4 rows; candidates share ≥1
+    band signature. For planted dups (j≈0.98)
     the hit probability is 1-(1-j⁴)⁴ ≈ 0.99996; for background (j<0.1)
     ≈ 4·10⁻⁴. The verify step removes any false positives with an exact
     ``array_intersect`` size per candidate pair (sets are distinct by
@@ -271,34 +299,20 @@ def minhash_pairs_from_shingle_sets(
     # cheaply re-scan is pure block-manager pressure (advisor r19).
     if checkpoint_input:
         sets = sets.localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
-    params = minhash_params(NUM_HASHES)
-
-    def _mh(a: int, b: int):  # unary lambda per hash (transform arity)
-        return F.array_min(
-            F.transform(F.col("harr"), lambda h: minhash_expr(h, a, b))
-        )
-
-    sig = sets.select(
-        "doc_id",
-        *[_mh(a, b).alias(f"mh_{j}") for j, (a, b) in enumerate(params)],
-    )
-    n_bands = NUM_HASHES // BAND_SIZE
-    band_structs = []
-    for band in range(n_bands):
-        members = [F.col(f"mh_{band * BAND_SIZE + r}") for r in range(BAND_SIZE)]
-        key = F.concat_ws(",", *[m.cast("string") for m in members])
-        band_structs.append(F.struct(F.lit(band).alias("band"), key.alias("band_sig")))
+    # Signature, then bands, as two projections: the folds (interpreted
+    # lambdas) sit in a Project and the Generate stays whole-stage
+    # codegen. One ``inline`` over the folds loses the codegen: 0.66 vs
+    # 0.59 s for the band pass over 4× the sf0.1 set table (4 cores).
     # Materialize the (tiny: docs × bands) banded table: BOTH self-join
     # sides reference it, and without the checkpoint each side re-runs
     # the per-row md5 hashing of every shingle (round-4 plan audit; same
     # re-execution class as the ngram df-cut fix).
+    mh = [f"mh_{j}" for j in range(NUM_HASHES)]
     banded = (
-        sig.select("doc_id", F.explode(F.array(*band_structs)).alias("b"))
-        .select(
-            "doc_id",
-            F.col("b.band").alias("band"),
-            F.col("b.band_sig").alias("band_sig"),
+        sets.selectExpr(
+            "doc_id", *[f"{e} AS {m}" for e, m in zip(minhash_sig_sql("harr"), mh)]
         )
+        .selectExpr("doc_id", f"inline({lsh_bands_sql(mh)})")
         .localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
     )
 
@@ -440,21 +454,13 @@ def _simhash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def _vote(b: int):  # v_b > 0  ⇔  2·n_set > size(harr)
-        n_set = F.size(
-            F.filter(
-                F.col("harr"),
-                lambda h: F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1,
-            )
-        )
-        return F.when(n_set * 2 > F.size("harr"), F.lit(1 << b)).otherwise(
-            F.lit(0)
-        )
-
-    sim = F.lit(0).cast("long")
-    for b in range(SIMHASH_BITS):
-        sim = sim + _vote(b)
-    return sets.select("doc_id", sim.alias("simhash"))
+    # v_b > 0  ⇔  2·n_set > size(harr); one SQL text for all 32 votes
+    votes = " + ".join(
+        f"CASE WHEN size(filter(harr, h -> (shiftright(h, {b}) & 1) = 1)) * 2"
+        f" > size(harr) THEN {1 << b} ELSE 0 END"
+        for b in range(SIMHASH_BITS)
+    )
+    return sets.selectExpr("doc_id", f"CAST(0 AS BIGINT) + {votes} AS simhash")
 
 
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -579,7 +585,6 @@ def _span_sets(
     span_scrub passes its own materialized tokenized corpus so the whole
     operator reads the documents table exactly once.
     """
-    from ..functions.hashing import h64
     from ..functions.text import tokens
 
     if toks_df is None:
@@ -592,12 +597,10 @@ def _span_sets(
             load_table(spark, sf_dir, "documents").select("doc_id", "text")
         ).select("doc_id", tokens("text").alias("toks"))
     d = toks_df.filter(F.size("toks") >= SPAN_TOKENS)
-    return d.select(
+    span_h = h64_spark_sql(f"concat_ws(' ', slice(toks, s, {SPAN_TOKENS}))")
+    return d.selectExpr(
         "doc_id",
-        F.transform(
-            F.expr(f"sequence(1, size(toks) - {SPAN_TOKENS} + 1)"),
-            lambda s: h64(F.concat_ws(" ", F.slice("toks", s, SPAN_TOKENS))),
-        ).alias("sarr"),
+        f"transform(sequence(1, size(toks) - {SPAN_TOKENS} + 1), s -> {span_h}) AS sarr",
     ).localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
 
 

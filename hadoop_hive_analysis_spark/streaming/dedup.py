@@ -165,54 +165,29 @@ def with_minhash_bands(docs: DataFrame) -> DataFrame:
     array<struct<band int, band_sig string>> with the same
     comma-joined band keys the batch banded table uses. Docs too short
     to shingle (< 3 tokens) are dropped, exactly like the batch path.
+    The signature and band keys are the batch core's own SQL-text
+    templates (``minhash_sig_sql``, ``lsh_bands_sql``), so the two paths
+    share one spelling of every hash.
     """
-    from ..functions.hashing import h31, minhash_expr, minhash_params
+    from ..functions.hashing import h31_spark_sql
     from ..functions.text import tokens
-    from ..operators.dedup import BAND_SIZE, NUM_HASHES
+    from ..operators.dedup import NUM_HASHES, lsh_bands_sql, minhash_sig_sql
 
-    params = minhash_params(NUM_HASHES)
-    d = (
+    shingle = "concat_ws(' ', slice(_toks, i, 3))"
+    return (
         docs.withColumn("_toks", tokens("text"))
         .filter(F.size("_toks") >= 3)
         .withColumn(
             "_hs",
-            F.transform(
-                F.expr(
-                    "transform(sequence(1, size(_toks) - 2), "
-                    "i -> concat_ws(' ', slice(_toks, i, 3)))"
-                ),
-                lambda s: h31(s),
-            ),
+            F.expr(f"transform(sequence(1, size(_toks) - 2), i -> {h31_spark_sql(shingle)})"),
         )
+        .withColumn("sig", F.expr(f"array({', '.join(minhash_sig_sql('_hs'))})"))
         .withColumn(
-            "sig",
-            F.array(
-                *[
-                    F.array_min(
-                        F.transform(F.col("_hs"), lambda h: minhash_expr(h, a, b))
-                    )
-                    for a, b in params
-                ]
-            ),
+            "bands",
+            F.expr(lsh_bands_sql([f"element_at(sig, {k + 1})" for k in range(NUM_HASHES)])),
         )
+        .drop("_toks", "_hs")
     )
-    n_bands = NUM_HASHES // BAND_SIZE
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(band).alias("band"),
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.element_at("sig", band * BAND_SIZE + r + 1).cast("string")
-                        for r in range(BAND_SIZE)
-                    ],
-                ).alias("band_sig"),
-            )
-            for band in range(n_bands)
-        ]
-    )
-    return d.withColumn("bands", bands).drop("_toks", "_hs")
 
 
 def neardup_snapshot(docs: DataFrame, materialize: bool = True) -> DataFrame:
