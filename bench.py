@@ -54,11 +54,10 @@ def main() -> None:
 
     # Warm-up: touch the fact table so JVM/codegen/file-index costs don't
     # land on the first timed query, then drive the reference pack once
-    # UNTIMED — a late-r9 adjudication caught a run-start ramp that made
-    # the first-in-pack queries (q1a 2.76×, q2, lang_id) flag at host
-    # factor 1.0 and vanish on the immediate rerun; best-of-3 cannot
-    # absorb a ramp that outlasts all three runs of a 0.4 s query, a
-    # ~5 s untimed prefix can.
+    # UNTIMED — a run-start ramp once made the first-in-pack queries
+    # (q1a 2.76×, q2, lang_id) slow only until an immediate rerun;
+    # best-of-3 cannot absorb a ramp that outlasts all three runs of a
+    # 0.4 s query, a ~5 s untimed prefix can.
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
     # warm the first N *timed* entries (bench=True), not the first N
     # positional — a rotation or reorder that puts a bench=False entry up
@@ -119,94 +118,13 @@ def main() -> None:
     }
     if errors:
         out["errors"] = errors
-    # Auto-adjudicate transient flags (r15): best-of-3 per query still
-    # lets a GC pause / task-launch hiccup during ONE query's 3-run slot
-    # flag it at >1.2x vs prior — r14 carried 11 such flags and r15's
-    # first pin 16, every one of which the manual isolation protocol
-    # (SCALING.md) later adjudicated as host variance (sign-flipping
-    # A/B, unchanged tree). Automate that protocol's first step: re-run
-    # ONLY the flagged queries (2 more attempts, min-merged — min() can
-    # only move a timing toward the truth on a quiet slot), record which
-    # were re-measured so the artifact stays honest about the extra
-    # attempts, and recompute flags. A real plan regression re-measures
-    # slow again and KEEPS its flag; a transient clears itself instead of
-    # costing a per-round adjudication. Capped at 10 s/query so a genuine
-    # pack-wide collapse cannot double the bench wall.
-    first_pass = _regressions_vs_prior(timings, sf)
-    flagged_names = [n for n in first_pass if not n.startswith("_")]
-    if flagged_names:
-        # Persist the PRE-adjudication flag list (judge r15 item 8): the
-        # committed artifact must show what auto-cleared, not just the
-        # survivors, so the adjudication is auditable without SCALING.md.
-        out["flags_prepass"] = {n: first_pass[n] for n in sorted(flagged_names)}
-    REMEASURE_RUNS = 2
-    REMEASURE_CAP_SEC = 10.0
-    remeasured = []
-    for name in flagged_names:
-        if timings[name] > REMEASURE_CAP_SEC:
-            continue
-        spec = QUERIES[name]
-        attempts_done = 0
-        try:
-            for _ in range(REMEASURE_RUNS):
-                t0 = time.perf_counter()
-                spec.fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                timings[name] = min(
-                    timings[name], round(time.perf_counter() - t0, 4)
-                )
-                attempts_done += 1
-                _release(spark)
-        except Exception:
-            # keep any lowering already applied; first-pass timing stands —
-            # but the failed attempt's blocks must not leak into the NEXT
-            # flagged query's re-runs (advisor r16), mirroring the pack
-            # loop's error path
-            _release(spark)
-        if attempts_done:  # a partial remeasure still mutated timings —
-            # record it (and recompute value below) or the artifact lies
-            remeasured.append(name)
-    if remeasured:
-        # unconditional: timings may have been lowered even when a later
-        # attempt raised (ADVICE r15) — value must equal sum(queries)
-        out["value"] = round(sum(timings.values()), 4)
-        out["remeasured"] = remeasured
-    regressions = _regressions_vs_prior(timings, sf)
-    factor = regressions.pop("_host_speed_factor", None)
-    by_file = regressions.pop("_host_speed_factor_by_file", None)
-    # Final flags = first-pass survivors ONLY (ADVICE r15): the remeasure
-    # lowered some timings, which lowers the pack/file median, which can
-    # push a borderline un-flagged query past 1.2x — a "flag" that never
-    # received the adjudication re-runs would contradict the protocol.
-    regressions = {n: v for n, v in regressions.items() if n in first_pass}
-    # Absolute-delta floor on SURVIVING flags (judge r18 item 2): every
-    # one of r18's three noise survivors was a <=0.32 s delta on a
-    # factor-1.13 host vs a 0.92 pin — a ratio-only rule re-flags that
-    # shape every time the host factors straddle the pin's. A surviving
-    # flag now needs ratio_vs_pack > 1.3 AND an absolute delta > 0.5 s;
-    # the prepass stays at 1.2x so the remeasure loop is still generous,
-    # and flags_prepass still records everything that tripped it.
-    regressions = _surviving_flags(regressions)
     # Native-schema section: the reference's own .dat format at ~1 GB, so
     # the BASELINE comparison is apples-to-apples on schema AND format.
-    # Best-effort: it must not void the headline pack. Runs AFTER the
-    # pack's host factor is known so the native flag pass (judge r18
-    # item 2: the r18 pin committed a 4x-polluted q2 median that nothing
-    # flagged because store_sales sat outside the flag machinery) can
-    # normalize by the same factor as the pack.
+    # Best-effort: it must not void the headline pack.
     try:
-        out["store_sales"] = _store_sales_section(
-            spark, host_factor=factor if factor is not None else 1.0
-        )
+        out["store_sales"] = _store_sales_section(spark)
     except Exception as exc:
         out["store_sales"] = {"error": f"{type(exc).__name__}: {exc}"[:200]}
-    if factor is not None:
-        out["host_speed_factor"] = factor
-    if by_file:
-        out["host_speed_factor_by_file"] = by_file
-    if regressions:
-        out["regressions_vs_prior"] = regressions
     # BASELINE.md comparables: the reference reports CPU-s and MB-s; Spark's
     # analogs (executor CPU time + peak JVM memory) come from the UI REST
     # API. Best-effort — absent UI must not break the benchmark line.
@@ -235,9 +153,9 @@ def _emit(
     200-char error strings + the regression block) and the round recorded
     ``"parsed": null`` — a self-inflicted blind spot (VERDICT.md r4).
     Full detail always lands in ``BENCH_FULL.json`` next to this script;
-    the stdout line drops optional sections (regression detail, error
-    text, store_sales breakdown — all preserved in the sidecar) until it
-    fits the window with headroom.
+    the stdout line drops optional sections (error text, store_sales
+    breakdown — both preserved in the sidecar) until it fits the window
+    with headroom.
     """
     here = sidecar_dir or os.path.dirname(os.path.abspath(__file__))
     try:
@@ -256,8 +174,7 @@ def _emit(
     def _core_queries_only(d: dict) -> None:
         # The pack outgrew the window (68 entries ≈ 2k chars alone): keep
         # the driver-scored queries on stdout, count the rest — their
-        # timings are in the sidecar, and the next round's regression
-        # flagger needs only the keys that priors recorded.
+        # timings are in the sidecar.
         if core_queries:
             kept = {k: v for k, v in d["queries"].items() if k in core_queries}
             d["queries_omitted"] = len(d["queries"]) - len(kept)
@@ -265,10 +182,6 @@ def _emit(
 
     slim = dict(out)
     for prune in (
-        lambda d: d.pop("host_speed_factor_by_file", None),
-        lambda d: d.pop("regressions_vs_prior", None),
-        lambda d: d.pop("flags_prepass", None),  # full detail in the sidecar
-        lambda d: d.pop("remeasured", None),  # full list in the sidecar
         lambda d: d.update(
             {"errors": sorted(d["errors"])} if "errors" in d else {}
         ),
@@ -288,10 +201,9 @@ def _emit(
     s = line(slim)
     if len(s) > LIMIT:  # last resort: contract fields only (queries
         # already rounded + core-restricted by the prune chain above).
-        # host_speed_factor and release_residual_max ride along (judge
-        # r18 item 8): every flag adjudication starts from those two
-        # numbers, so they must survive even the minimal line; so does
-        # cpus, without which no two lines are comparable.
+        # release_residual_max rides along: it says whether the pack ran
+        # with fresh block state; so does cpus, without which no two
+        # lines are comparable.
         minimal = {
             "metric": slim["metric"],
             "value": slim["value"],
@@ -299,68 +211,14 @@ def _emit(
             "queries": slim["queries"],
             "sf": slim["sf"],
         }
-        for k in ("host_speed_factor", "release_residual_max", "cpus"):
+        for k in ("release_residual_max", "cpus"):
             if k in slim:
                 minimal[k] = slim[k]
         s = line(minimal)
     print(s)
 
 
-def _surviving_flags(regressions: dict) -> dict:
-    """The absolute-delta floor for flags that survive the remeasure
-    (judge r18 item 2): ratio_vs_pack > 1.3 AND delta > 0.5 s. All three
-    of r18's noise survivors were <= 0.32 s deltas at 1.31-1.37x — the
-    exact shape a mixed host-factor pair produces on sub-second queries —
-    while the one real candidate (price_quantiles_sketch, +1.02 s at
-    1.41x) clears both bars."""
-    return {
-        n: v
-        for n, v in regressions.items()
-        if v["ratio_vs_pack"] > 1.3 and (v["now"] - v["prior"]) > 0.5
-    }
-
-
-def _native_baseline() -> dict[str, float]:
-    """Newest-first merge of prior artifacts' store_sales medians, the
-    same merge discipline as ``_regressions_vs_prior``. Two shapes exist:
-    ``BENCH_FULL.json`` carries ``store_sales.queries``; driver-recorded
-    ``BENCH_r*.json`` lines carry ``store_sales`` pruned to the flat
-    name->sec dict by ``_emit``."""
-    import glob
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    candidates = []
-    for p in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"r(\d+)", os.path.basename(p))
-        if m:
-            candidates.append((int(m.group(1)), p))
-    prior_files = [p for _, p in sorted(candidates)]
-    full = os.path.join(here, "BENCH_FULL.json")
-    if os.path.exists(full):
-        prior_files.append(full)
-    baseline: dict[str, float] = {}
-    for path in reversed(prior_files):
-        try:
-            with open(path) as f:
-                prior = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if isinstance(prior.get("parsed"), dict):
-            prior = prior["parsed"]
-        ss = prior.get("store_sales")
-        if not isinstance(ss, dict):
-            continue
-        queries = ss.get("queries", ss)
-        if not isinstance(queries, dict):
-            continue
-        for name, sec in queries.items():
-            if name not in baseline and isinstance(sec, (int, float)) and sec > 0:
-                baseline[name] = float(sec)
-    return baseline
-
-
-def _store_sales_section(spark, host_factor: float = 1.0) -> dict:
+def _store_sales_section(spark) -> dict:
     """Reference-native benchmark: generate (once, cached) ~1 GB of
     23-field pipe-delimited store_sales.dat + store.dat, then time the
     4 reference queries end-to-end INCLUDING the PERMISSIVE CSV parse —
@@ -423,187 +281,13 @@ def _store_sales_section(spark, host_factor: float = 1.0) -> dict:
             _release(spark)  # untimed; see the pack loop
         timings[name] = sorted(samples)[1]  # median of 3
         runs_detail[name] = samples
-    section = {
+    return {
         "rows": n_rows,
         "dat_bytes": n_bytes,
         "gen_sec": gen_sec,
         "queries": timings,
         "runs": runs_detail,
     }
-    # Native flag pass (judge r18 item 2): the r18 pin's q2 median was a
-    # 4x host pollution (runs 6.4/12.0/12.2 s vs the normal ~3 s) and
-    # nothing flagged it — the natives sat outside the flag machinery, so
-    # the next round's comparisons would have been judged against a
-    # corrupted baseline. Same shape as the pack: prepass at 1.2x vs the
-    # merged prior (pack-factor-normalized), remeasure the tripped
-    # queries with 2 extra runs (median over all 5 — a median absorbs the
-    # polluted-run class that min-merge was designed for, while staying
-    # the committed native metric), then final flags need ratio_vs_pack
-    # > 1.3 AND delta > 0.5 s like the pack's surviving-flag floor.
-    prior = _native_baseline()
-    norm = max(host_factor, 1.0)
-
-    def _flag_dict(name: str, threshold: float) -> dict | None:
-        if name not in prior:
-            return None
-        ratio = timings[name] / prior[name]
-        if ratio / norm <= threshold:
-            return None
-        return {
-            "prior": prior[name],
-            "now": timings[name],
-            "ratio": round(ratio, 2),
-            "ratio_vs_pack": round(ratio / norm, 2),
-        }
-
-    prepass = {}
-    for name, _fn in fns:
-        d = _flag_dict(name, 1.2)
-        if d:
-            prepass[name] = d
-    if prepass:
-        section["flags_prepass"] = prepass
-        remeasured = []
-        for name, fn in fns:
-            if name not in prepass:
-                continue
-            try:
-                for _ in range(2):
-                    t0 = time.perf_counter()
-                    fn(spark).write.format("noop").mode("overwrite").save()
-                    runs_detail[name].append(
-                        round(time.perf_counter() - t0, 4)
-                    )
-                    _release(spark)
-                remeasured.append(name)
-            except Exception:
-                _release(spark)
-            samples = runs_detail[name]
-            timings[name] = sorted(samples)[len(samples) // 2]
-        if remeasured:
-            section["remeasured"] = remeasured
-        flags = {}
-        for name in prepass:
-            d = _flag_dict(name, 1.3)
-            if d and (d["now"] - d["prior"]) > 0.5:
-                flags[name] = d
-        if flags:
-            section["flags"] = flags
-    return section
-
-
-def _regressions_vs_prior(timings: dict[str, float], sf: float) -> dict:
-    """Flag >20% per-query slowdowns vs the newest BENCH_r*.json at the
-    same SF — the bench artifact itself carries the regression signal
-    instead of leaving it to post-hoc diffing. Best-effort: a missing or
-    unreadable prior must not break the benchmark line.
-
-    Ratios are normalized by the pack-median ratio before flagging: prior
-    artifacts were recorded on whatever host the driver ran that round,
-    and a slower/busier host shifts EVERY query by the same factor —
-    round 4 measured a uniform ~1.4x vs the round-3 artifact with zero
-    code changes to the slow queries. A plan regression moves one query
-    relative to the pack; host speed moves the whole pack. The median
-    factor is reported alongside (``host_speed_factor``) so absolute
-    drift stays visible in the artifact rather than silently absorbed."""
-    import glob
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    candidates = []
-    for p in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"r(\d+)", os.path.basename(p))
-        if m:  # skip non-numeric suffixes (e.g. BENCH_rerun.json)
-            candidates.append((int(m.group(1)), p))
-    prior_files = [p for _, p in sorted(candidates)]
-    # The committed full sidecar from the previous round carries the
-    # COMPLETE query map (the driver-recorded artifact's stdout line is
-    # core-restricted since r5) — prefer it so pytest-only queries keep
-    # regression coverage. But the sidecar is overwritten on EVERY run,
-    # including partial/error-heavy ones (ADVICE r5), so baselines MERGE
-    # per-name across priors, newest first: a name missing from a sparse
-    # sidecar falls back to the newest round artifact that has it instead
-    # of silently dropping out of coverage.
-    full = os.path.join(here, "BENCH_FULL.json")
-    if os.path.exists(full):
-        prior_files.append(full)
-    baseline: dict[str, tuple[float, str]] = {}
-    for path in reversed(prior_files):  # newest first fills first
-        try:
-            with open(path) as f:
-                prior = json.load(f)
-        except (OSError, ValueError):
-            continue
-        # Driver-recorded artifacts wrap the bench line under "parsed".
-        if isinstance(prior.get("parsed"), dict):
-            prior = prior["parsed"]
-        if prior.get("sf") != sf or not isinstance(prior.get("queries"), dict):
-            continue
-        for name, before in prior["queries"].items():
-            if name not in baseline and isinstance(before, (int, float)) and before > 0:
-                baseline[name] = (float(before), os.path.basename(path))
-    ratios = {
-        name: now / baseline[name][0]
-        for name, now in timings.items()
-        if name in baseline
-    }
-    if not ratios:
-        return {}
-
-    def _median(vals: list[float]) -> float:
-        ordered = sorted(vals)
-        return ordered[len(ordered) // 2]
-
-    # Host-speed normalization is PER BASELINE FILE: each prior artifact
-    # was recorded under its own host conditions, so a query whose only
-    # baseline is an older round artifact must not be normalized by a
-    # factor dominated by sidecar-era ratios (ADVICE r6). Files that
-    # contribute too few names for a stable median fall back to the
-    # global median.
-    by_file: dict[str, list[float]] = {}
-    for name, ratio in ratios.items():
-        by_file.setdefault(baseline[name][1], []).append(ratio)
-    global_median = _median(list(ratios.values()))
-    MIN_NAMES_FOR_FILE_MEDIAN = 5
-    file_median = {
-        f: (_median(v) if len(v) >= MIN_NAMES_FOR_FILE_MEDIAN else global_median)
-        for f, v in by_file.items()
-    }
-    # Sub-half-second queries measure stage-scheduling overhead, not a
-    # plan: at ~0.3 s a single extra GC pause or task-launch hiccup is a
-    # 30%+ "regression". doc_fingerprint (0.9 s committed, improving
-    # round-over-round) tripped the flagger twice on exactly this noise
-    # (r5, r7 — adjudicated by an interleaved A/B both times),
-    # so queries where BOTH sides of the comparison sit under the floor
-    # are exempt from per-name flagging; they remain in the artifact's
-    # timings and in the pack median, so a pack-wide slowdown still
-    # surfaces through host_speed_factor.
-    FLAG_FLOOR_SEC = 0.5
-    flagged = {}
-    for name, ratio in ratios.items():
-        if (
-            timings[name] < FLAG_FLOOR_SEC
-            and baseline[name][0] < FLAG_FLOOR_SEC
-        ):
-            continue
-        # Never normalize a genuine pack-wide slowdown away as "the host
-        # got faster would hide it" — only divide out factors > 1, and
-        # carry the factor in the artifact either way.
-        norm = max(file_median[baseline[name][1]], 1.0)
-        if ratio / norm > 1.2:
-            flagged[name] = {
-                "prior": baseline[name][0],
-                "now": timings[name],
-                "ratio": round(ratio, 2),
-                "ratio_vs_pack": round(ratio / norm, 2),
-                "baseline": baseline[name][1],
-            }
-    flagged["_host_speed_factor"] = round(global_median, 2)
-    if len(file_median) > 1:
-        flagged["_host_speed_factor_by_file"] = {
-            f: round(m, 2) for f, m in file_median.items()
-        }
-    return flagged
 
 
 def _executor_metrics(spark) -> dict:

@@ -509,7 +509,8 @@ def doc_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter (Bayardo all-pairs) was prototyped first and REJECTED on
     measurements: near-uniform df≈1..4 weights put ~75% of each doc's
     energy in the t=0.5 prefix (candidate cut only 1.5×) while the
-    struct-array verify cost 53 s — see OPTIMIZATION_r20.md.
+    struct-array verify cost 53 s — see
+    ``git show 2c1af62:OPTIMIZATION_r20.md``.
 
     The posting-list frame is checkpointed SERIALIZED (CKPT_LEVEL,
     MEMORY_AND_DISK): it feeds both the norms pass and the pair

@@ -508,8 +508,9 @@ def build() -> dict:
     )
     # Kept scored in round 8: the planned r8 demotion ("grouping-set
     # expansion stays visible through events_hierarchical_rollup") was
-    # FALSIFIED by scripts/rotation_plan.py — the rollup aggregates
-    # daily bars from hourly partials without an Expand node, so
+    # FALSIFIED by a check of the window's physical-operator shapes
+    # (its script is in `git show 2c1af62:scripts/`) — the rollup
+    # aggregates daily bars from hourly partials without an Expand node, so
     # demoting cube_orders + events_sliding_window together would have
     # dropped the Expand operator from the scored window entirely. The
     # r8 slot came from revenue_by_region instead.

@@ -81,9 +81,9 @@ def _build() -> dict[str, QuerySpec]:
 # The driver scores a bounded window of the registry (50 entries).
 # DRIVER_WINDOW is that window, in registry order, and the only place it
 # is decided; every other entry is still oracle-checked by
-# tests/test_oracle_parity.py. To change the window, swap names here and
-# run scripts/rotation_plan.py before and after to compare the physical
-# shapes the driver hashes.
+# tests/test_oracle_parity.py. To change the window, swap names here;
+# `python scripts/scale.py <DRIVER_WINDOW names> 10` checks the new window
+# against DuckDB on the fixture grown 10x.
 DRIVER_SLOT_CAP = 50
 DRIVER_WINDOW: tuple[str, ...] = (
     "q1a_top_suppliers_by_revenue",

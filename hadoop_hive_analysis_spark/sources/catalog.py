@@ -115,6 +115,35 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _read_with_declared(spark, path, declared)
 
 
+def stream_files(
+    spark: SparkSession,
+    sf_dir: str,
+    file_glob: str,
+    schema: StructType,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """File-source parquet stream over the top-level files of ``sf_dir``
+    whose names match ``file_glob``.
+
+    A file stream takes a DIRECTORY and filters its files by name, so a
+    table stored as a directory (``events.parquet/part-*.parquet``)
+    matches nothing and the stream would drain zero rows without an
+    error. Raise instead when Hadoop's ``globStatus`` finds no file.
+    """
+    sc = spark.sparkContext
+    pattern = sc._jvm.org.apache.hadoop.fs.Path(f"{sf_dir}/{file_glob}")
+    fs = pattern.getFileSystem(sc._jsc.hadoopConfiguration())
+    if all(s.isDirectory() for s in fs.globStatus(pattern) or []):
+        raise FileNotFoundError(
+            f"no file in {sf_dir!r} matches {file_glob!r}; a table stored "
+            "as a directory cannot feed a file stream"
+        )
+    reader = spark.readStream.schema(schema).option("pathGlobFilter", file_glob)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    return reader.parquet(sf_dir)
+
+
 def _byte_size(v: str) -> int:
     """Parse a Spark byte-size conf string ('128MB', '4m', '1048576b',
     plain digits) — the subset Spark's JavaUtils.byteStringAsBytes

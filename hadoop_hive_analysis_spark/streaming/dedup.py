@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import TESTDATA_SCHEMAS
-from ..sources.catalog import spread_small_scan
+from ..sources.catalog import spread_small_scan, stream_files
 from .events import WATERMARK
 
 
@@ -38,10 +38,8 @@ def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     appended to by the crawler; swap for Kafka with the same plan).
     Unlike events (nanos-timestamp workaround), the batch schema is
     directly streamable."""
-    return (
-        spark.readStream.schema(TESTDATA_SCHEMAS["documents"])
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
+    return stream_files(
+        spark, sf_dir, "documents.parquet", TESTDATA_SCHEMAS["documents"]
     )
 
 

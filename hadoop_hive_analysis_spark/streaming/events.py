@@ -68,7 +68,7 @@ def read_events_stream(
     """
     from pyspark.sql.types import TimestampType
 
-    from ..sources.catalog import _footer_schema
+    from ..sources.catalog import _footer_schema, stream_files
 
     # _footer_schema sets/restores the nanosAsLong flag around its eager
     # sniff; the explicit-schema stream scan below never consults it.
@@ -89,14 +89,11 @@ def read_events_stream(
             StructField("props", StringType()),
         ]
     )
-    # File-source streams take a DIRECTORY; glob-filter to the events table.
-    reader = spark.readStream.schema(schema).option("pathGlobFilter", file_glob)
-    if max_files_per_trigger is not None:
-        # AvailableNow respects this: the drain becomes several ordered
-        # microbatches (files ordered by modification time), which is how
-        # the left-outer replay stages its watermark-advancing sentinels.
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = reader.parquet(sf_dir)
+    # max_files_per_trigger: AvailableNow respects it, so the drain
+    # becomes several ordered microbatches (files ordered by modification
+    # time), which is how the left-outer replay stages its
+    # watermark-advancing sentinels.
+    raw = stream_files(spark, sf_dir, file_glob, schema, max_files_per_trigger)
     if ts_is_nanos:
         raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
     return raw

@@ -18,15 +18,14 @@ from pyspark.sql import functions as F
 
 from ..operators.similarity import _QUANT
 from ..schemas import TESTDATA_SCHEMAS
+from ..sources.catalog import stream_files
 
 
 def read_embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the embeddings table (the vector landing
     zone being appended to; swap for Kafka with the same plan)."""
-    return (
-        spark.readStream.schema(TESTDATA_SCHEMAS["embeddings"])
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(sf_dir)
+    return stream_files(
+        spark, sf_dir, "embeddings.parquet", TESTDATA_SCHEMAS["embeddings"]
     )
 
 

@@ -99,19 +99,26 @@ def _copy(name: str, t: pa.Table, k: int, replicate_docs: bool) -> pa.Table:
     return t
 
 
+def write_scaled_table(src: str, dst: str, mult: int, replicate_docs: bool = False) -> None:
+    """Write ``mult`` copies of the fixture table file ``src`` to ``dst``,
+    one row group per copy."""
+    base = pq.read_table(src)
+    name = os.path.basename(src).removesuffix(".parquet")
+    with pq.ParquetWriter(dst, base.schema) as w:
+        for k in range(mult):
+            w.write_table(_copy(name, base, k, replicate_docs))
+
+
 def build_scaled_dir(base_dir: str, mult: int, replicate_docs: bool = False) -> str:
     """Write a temp sf_dir holding ``mult`` copies of the grown tables and
     links to every other table of ``base_dir``; the caller removes it."""
     d = tempfile.mkdtemp(prefix=f"hha_scale_{mult}x_")
     for f in sorted(os.listdir(base_dir)):
-        name = f.removesuffix(".parquet")
-        if name not in ("documents", "events", "embeddings", "lineitem"):
-            os.symlink(os.path.join(base_dir, f), os.path.join(d, f))
-            continue
-        base = pq.read_table(os.path.join(base_dir, f))
-        with pq.ParquetWriter(os.path.join(d, f), base.schema) as w:
-            for k in range(mult):
-                w.write_table(_copy(name, base, k, replicate_docs))
+        src, dst = os.path.join(base_dir, f), os.path.join(d, f)
+        if f.removesuffix(".parquet") in ("documents", "events", "embeddings", "lineitem"):
+            write_scaled_table(src, dst, mult, replicate_docs)
+        else:
+            os.symlink(src, dst)
     return d
 
 

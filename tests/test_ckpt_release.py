@@ -6,8 +6,8 @@ long-lived JVM running a query pack, blocks from earlier queries
 accumulate and squeeze later queries' execution memory — the r15 sf1
 sweep measured ``dedup_embedding_lsh`` at 42 s in-pack vs 3.3–3.8 s in a
 fresh JVM and adjudicated the gap to exactly this. ``bench.py`` and
-``scripts/sf1_window_sweep.py`` now call
-``session.release_cached_blocks`` between (untimed) runs; these tests pin
+``scripts/scale.py`` call ``session.release_cached_blocks`` between
+(untimed) runs; these tests pin
 that the call actually empties the BlockManager in both ways a
 checkpointed frame can be held:
 

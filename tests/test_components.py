@@ -453,30 +453,22 @@ def test_guardrail_empty_corpus_matches_duckdb_oracle(spark, tmp_path):
     assert tuple(srow[0]) == tuple(orow[0]) == (0, 0, 0, 0, 0, 0, 0, 0)
 
 
-def _sf1_embeddings_dir(tmp_path_factory) -> str:
-    """Directory holding the 10x percolating embeddings table: reuse
-    the sf1 sweep's cached fixture when present (same builder), else
-    build just the embeddings table (numpy, seconds)."""
+def _sf1_embeddings_dir(tmp_path_factory, sf_dir) -> str:
+    """Directory holding the 10x percolating embeddings table, grown by
+    ``scripts/scale.py`` from the sf0.1 fixture beside ``sf_dir`` (numpy,
+    seconds)."""
     import os
 
-    cached = os.environ.get("HHA_SF1_DIR", "/tmp/hha_sf1")
-    f = os.path.join(cached, "embeddings.parquet")
-    try:
-        import pyarrow.parquet as pq
+    from scripts.scale import write_scaled_table
 
-        if pq.read_metadata(f).num_rows == 20_000:
-            return cached
-    except Exception:
-        pass
-    import scripts.sf1_window_sweep as sw
-
+    src = os.path.join(os.path.dirname(sf_dir), "sf0.1", "embeddings.parquet")
     d = tmp_path_factory.mktemp("sf1emb")
-    sw._build_embeddings(str(d / "embeddings.parquet"))
+    write_scaled_table(src, str(d / "embeddings.parquet"), 10)
     return str(d)
 
 
 def test_semantic_collapse_refuses_percolated_graph_at_10x(
-    spark, tmp_path_factory
+    spark, sf_dir, tmp_path_factory
 ):
     """THE enforcement test at the scale where it matters: on the 10x
     fixture (SCALING.md round 13: the cos>=0.4 graph chains 19,988 of
@@ -492,7 +484,7 @@ def test_semantic_collapse_refuses_percolated_graph_at_10x(
         dedup_semantic_guardrail,
     )
 
-    d = _sf1_embeddings_dir(tmp_path_factory)
+    d = _sf1_embeddings_dir(tmp_path_factory, sf_dir)
     with pytest.raises(PercolatedGraphError, match="ppm"):
         dedup_semantic_collapse(spark, d)
     r = dedup_semantic_guardrail(spark, d).collect()[0]

@@ -772,3 +772,12 @@ def test_neardup_snapshot_side_is_materialized_in_the_join_plan(spark, sf_dir):
     assert "Scan ExistingRDD" in plan, (
         "snapshot is not a materialized (checkpointed) relation"
     )
+
+
+def test_directory_layout_table_fails_the_stream_loudly(spark, sf_dir, tmp_path):
+    """A table stored as a directory (``events.parquet/part-*.parquet``)
+    has no top-level file for the stream's name glob to match; the reader
+    must raise instead of draining zero rows."""
+    load_table(spark, sf_dir, "events").write.parquet(str(tmp_path / "events.parquet"))
+    with pytest.raises(FileNotFoundError, match="events.parquet"):
+        read_events_stream(spark, str(tmp_path))
