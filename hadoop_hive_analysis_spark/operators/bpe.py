@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..functions.frames import local_frame
 from ..functions.text import tokens
+from ..session import materialize
 from ..sources.catalog import load_table
 
 N_MERGES = 8
@@ -141,7 +142,7 @@ def _train(
     a chained 8-fold expression over one projection blows the analyzer
     up exponentially (each fold references its input ~5×), while the
     checkpointed per-round form is 8 tiny dict-sized jobs."""
-    words = _word_counts(spark, sf_dir).localCheckpoint()
+    words = materialize(_word_counts(spark, sf_dir))
     out: list[tuple[int, str, str, str, int]] = []
     for rank in range(n_merges):
         best = (
@@ -154,11 +155,11 @@ def _train(
             break  # every word is a single symbol — vocabulary saturated
         left, right, freq = best[0]["left"], best[0]["right"], best[0]["freq"]
         out.append((rank, left, right, left + right, freq))
-        nxt = words.select(
-            "word", "cnt", _apply_merge(F.col("syms"), left, right).alias("syms")
-        ).localCheckpoint()
-        words.unpersist()
-        words = nxt
+        words = materialize(
+            words.select(
+                "word", "cnt", _apply_merge(F.col("syms"), left, right).alias("syms")
+            )
+        )
     return out, words
 
 
@@ -169,9 +170,7 @@ def train_merges(
     freq)] — the merge table, highest-frequency pair first. The single-
     row argmax collect per iteration is contract-bounded (the k-means
     centroid precedent), not a hot-path collect."""
-    out, words = _train(spark, sf_dir, n_merges)
-    words.unpersist()
-    return out
+    return _train(spark, sf_dir, n_merges)[0]
 
 
 def bpe_merge_train(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -309,9 +308,9 @@ def bpe_quality_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     table_ok = len(merges) == N_MERGES and monotone
     num, den = BPE_COMPRESSION_FLOOR
-    # NOTE: ``words`` is localCheckpoint-backed — do not unpersist here;
-    # the returned frame re-executes from its blocks (the
-    # checkpoint-release hazard, see memory/checkpoint-release-protocol).
+    # NOTE: ``words`` is checkpoint-backed and the returned frame reads
+    # its blocks, so they must outlive this call; the between-queries
+    # ``session.release_cached_blocks`` frees them.
     return (
         words.agg(
             F.count(F.lit(1)).cast("long").alias("n_words"),

@@ -24,7 +24,7 @@ the declarative twin of the same fixpoint.
 
 from __future__ import annotations
 
-from ..session import CKPT_LEVEL
+from ..session import materialize
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -105,9 +105,9 @@ def connected_components(edges: DataFrame, src: str, dst: str) -> DataFrame:
     # Non-eager (r19): the labels-init distinct is the materializing
     # action, so setup costs one job instead of two; the union's two
     # branches land inside that same job and still read the one cached
-    # copy. Serialized level: same rationale as every corpus checkpoint.
+    # copy.
     edges = edges.select(F.col(src).alias("eu"), F.col(dst).alias("ev"))
-    edges = edges.localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+    edges = materialize(edges)
     sym = edges.union(edges.select(F.col("ev").alias("eu"), F.col("eu").alias("ev")))
     labels = sym.select(F.col("eu").alias("node")).distinct().withColumn(
         "label", F.col("node")
@@ -129,7 +129,7 @@ def connected_components(edges: DataFrame, src: str, dst: str) -> DataFrame:
         # Convergence from an aggregated scalar — no data to the driver.
         # Non-eager (r19): the changed-count below is the materializing
         # action, so each iteration costs one scheduled job, not two.
-        updated = updated.localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+        updated = materialize(updated)
         changed = updated.filter(F.col("new_label") < F.col("old_label")).count()
         labels = updated.select("node", F.col("new_label").alias("label"))
         if changed == 0:
@@ -224,13 +224,13 @@ def connected_components_bigstar(
         edges.select(F.col(src).alias("eu"), F.col(dst).alias("ev"))
         .filter(F.col("eu") != F.col("ev"))
         .distinct()
-        .localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+        .transform(materialize)
     )
     n_cur = cur.count()
     if n_cur <= small_graph_cap:
         return _components_driver_side(cur)
     for _ in range(MAX_ITERATIONS):
-        nxt = _small_star(_large_star(cur)).localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+        nxt = materialize(_small_star(_large_star(cur)))
         # Exact set equality in one anti-join: both sides are distinct, so
         # equal counts + empty (nxt \ cur) ⇒ equal sets; the Python `or`
         # short-circuits, so the except job only runs once counts agree.
@@ -335,7 +335,7 @@ def dedup_collapse(
     pairs = (
         dedup_minhash_lsh(spark, sf_dir)
         .select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-        .localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+        .transform(materialize)
     )
     comp = connected_components_bigstar(pairs, "u", "v")
     if require_clean:
@@ -415,7 +415,7 @@ def dedup_semantic_collapse(
     # One pair materialization feeds CC and (when enforcing) the
     # guardrail's edge count — the dual-consumer re-execution class
     # fixed in r10.
-    pairs = pairs.localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+    pairs = materialize(pairs)
     comp = connected_components_bigstar(pairs, "va", "vb")
     if require_clean:
         corpus = load_table(spark, sf_dir, "embeddings").agg(
@@ -500,7 +500,7 @@ def dedup_ensemble_collapse(
     sem = dedup_embedding_lsh(spark, sf_dir).select(
         F.col("va").alias("u"), F.col("vb").alias("v")
     )
-    pairs = lex.unionByName(sem).distinct().localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+    pairs = materialize(lex.unionByName(sem).distinct())
     comp = connected_components_bigstar(pairs, "u", "v")
     if require_clean:
         corpus = load_table(spark, sf_dir, "documents").agg(
@@ -673,7 +673,7 @@ def dedup_semantic_guardrail(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup_embedding_lsh(spark, sf_dir).select("va", "vb")
     # One pair materialization: edges feed BOTH the edge count and the
     # CC loop (the dual-consumer re-execution class fixed in r10).
-    pairs = pairs.localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+    pairs = materialize(pairs)
     comp = connected_components_bigstar(pairs, "va", "vb")
     return _guardrail_report(corpus, pairs, comp)
 
@@ -772,7 +772,7 @@ def cluster_quality_from_pairs(pairs: DataFrame) -> DataFrame:
     500k docs), so the materialization is kilobytes-to-megabytes at
     any corpus scale. Non-eager: the component loop's first count()
     is the materializing action."""
-    pairs = pairs.localCheckpoint(eager=False)
+    pairs = materialize(pairs)
     comp = connected_components_bigstar(pairs, "doc_a", "doc_b")
     sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("size"))
     stats = (

@@ -39,15 +39,7 @@ from ..functions.hashing import (
     minhash_sql,
 )
 from ..functions.text import with_shingles
-# CKPT_LEVEL (serialized): rationale + A/B measurements at its
-# definition. This module's context: the r15 sf1 sweep read
-# dedup_editdistance at 34.4 s in-pack (50 queries, one 12 GiB JVM)
-# against 6.5 s in a fresh JVM — cross-query deserialized-block
-# accumulation, the failure mode the serialized level bounds. Since
-# r16, pack runners additionally RELEASE all checkpoint blocks between
-# queries (session.release_cached_blocks — blocking unpersist + GC
-# drain), so in-pack measurements start from the fresh-JVM block state.
-from ..session import CKPT_LEVEL
+from ..session import materialize
 from ..sources.catalog import load_table
 
 JACCARD_THRESHOLD = 0.8
@@ -132,7 +124,7 @@ def _informative_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     LeftAnti / no-Window shape; :func:`dedup_ngram_jaccard` checkpoints
     the result so the cut executes once, not once per consumer branch.
     """
-    sh = _doc_shingles(spark, sf_dir).localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+    sh = materialize(_doc_shingles(spark, sf_dir))
     hot = (
         sh.groupBy("shingle")
         .agg(F.count("*").alias("df"))
@@ -180,7 +172,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     its logical plan stays inspectable (checkpointing replaces the plan
     with an RDD scan in the consumer).
     """
-    sh = _informative_shingles(spark, sf_dir).localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+    sh = materialize(_informative_shingles(spark, sf_dir))
     card = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -260,12 +252,12 @@ def lsh_bands_sql(sig: list[str]) -> str:
     return f"array({', '.join(structs)})"
 
 
-def minhash_pairs_from_shingle_sets(
-    sets: DataFrame, checkpoint_input: bool = True
-) -> DataFrame:
+def minhash_pairs_from_shingle_sets(sets: DataFrame) -> DataFrame:
     """MinHash-LSH verified near-dup pairs from a set-form shingle frame
     ``(doc_id, sarr, harr)`` — the shared core of the fused operator and
-    the staged pipeline (which feeds it a MATERIALIZED set table).
+    the staged pipeline. The band derivation and BOTH verify sides read
+    ``sets``, so callers pass a durable frame: the fused operator a
+    checkpoint, the staged pipeline a parquet table.
 
     Signature: per-ROW higher-order folds — ``mh_j = array_min(transform
     (harr, h → (a_j·h + b_j) mod P))`` — the same expression shape the
@@ -290,15 +282,6 @@ def minhash_pairs_from_shingle_sets(
     exploded table 50× its row count. Measured r19 at sf0.1: 1.53 s →
     0.79 s best-of-3, same 256 pairs bit-for-bit.
     """
-    # Materialize the set table once: the band derivation and BOTH
-    # verify sides reference it; without the checkpoint each branch
-    # re-runs tokenize→shingle→md5 from the scan (the round-4
-    # re-execution class). Callers whose input is ALREADY durable (the
-    # staged pipeline feeds a parquet materialization) pass
-    # ``checkpoint_input=False`` — re-caching a table every branch can
-    # cheaply re-scan is pure block-manager pressure (advisor r19).
-    if checkpoint_input:
-        sets = sets.localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
     # Signature, then bands, as two projections: the folds (interpreted
     # lambdas) sit in a Project and the Generate stays whole-stage
     # codegen. One ``inline`` over the folds loses the codegen: 0.66 vs
@@ -313,7 +296,7 @@ def minhash_pairs_from_shingle_sets(
             "doc_id", *[f"{e} AS {m}" for e, m in zip(minhash_sig_sql("harr"), mh)]
         )
         .selectExpr("doc_id", f"inline({lsh_bands_sql(mh)})")
-        .localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+        .transform(materialize)
     )
 
     a = banded.alias("a")
@@ -371,7 +354,11 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents").select("doc_id", "text"),
         full_width=True,
     )
-    return minhash_pairs_from_shingle_sets(shingle_sets(docs))
+    # Materialize the set table once: the band derivation and BOTH
+    # verify sides reference it; without the checkpoint each branch
+    # re-runs tokenize→shingle→md5 from the scan (the round-4
+    # re-execution class).
+    return minhash_pairs_from_shingle_sets(materialize(shingle_sets(docs)))
 
 
 def _minhash_sql_cols() -> str:
@@ -494,7 +481,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b.chunk").alias("chunk"),
             F.col("b.ckey").alias("ckey"),
         )
-        .localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+        .transform(materialize)
     )
     a = banded.alias("a")
     b = banded.alias("b")
@@ -598,10 +585,12 @@ def _span_sets(
         ).select("doc_id", tokens("text").alias("toks"))
     d = toks_df.filter(F.size("toks") >= SPAN_TOKENS)
     span_h = h64_spark_sql(f"concat_ws(' ', slice(toks, s, {SPAN_TOKENS}))")
-    return d.selectExpr(
-        "doc_id",
-        f"transform(sequence(1, size(toks) - {SPAN_TOKENS} + 1), s -> {span_h}) AS sarr",
-    ).localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+    return materialize(
+        d.selectExpr(
+            "doc_id",
+            f"transform(sequence(1, size(toks) - {SPAN_TOKENS} + 1), s -> {span_h}) AS sarr",
+        )
+    )
 
 
 def _span_hashes(sets: DataFrame) -> DataFrame:
@@ -848,7 +837,7 @@ def span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
             load_table(spark, sf_dir, "documents").select("doc_id", "text")
         )
         .select("doc_id", tokens("text").alias("toks"))
-        .localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+        .transform(materialize)
     )
     sets = _span_sets(spark, sf_dir, toks_df=d)
     # dup set from the array form: span_h alone shuffles with a plain
@@ -997,7 +986,7 @@ def decontaminate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", tokens("text").alias("toks"))
-        .localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+        .transform(materialize)
     )
     bench_pred = F.col("doc_id") % BENCH_MOD == 0
     sets = _span_sets(spark, sf_dir, toks_df=d)
@@ -1216,9 +1205,7 @@ def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # their df. (The cut itself is unchanged: df over the raw table, cap
     # STOP_SHINGLE_DF; the anti-join form lives on in the operators that
     # only need membership.)
-    sh = _doc_shingles(spark, sf_dir).localCheckpoint(
-        eager=False, storageLevel=CKPT_LEVEL
-    )
+    sh = materialize(_doc_shingles(spark, sf_dir))
     dfs = (
         sh.groupBy("shingle")
         .agg(F.count("*").alias("df"))
@@ -1241,7 +1228,7 @@ def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("sarr", F.expr("transform(pairs, x -> x.shingle)"))
         .select("doc_id", "n", "sarr", "pref")
-        .localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+        .transform(materialize)
     )
     pref = inf.select("doc_id", "n", F.explode("pref").alias("shingle"))
     pa, pb = pref.alias("pa"), pref.alias("pb")
@@ -1329,9 +1316,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical across engines; completeness vs the full self-join
     enumeration is pinned in tests.
     """
-    sh = _doc_shingles(spark, sf_dir).localCheckpoint(
-        eager=False, storageLevel=CKPT_LEVEL
-    )
+    sh = materialize(_doc_shingles(spark, sf_dir))
     dfs = (
         sh.groupBy("shingle")
         .agg(F.count("*").alias("df"))
@@ -1352,7 +1337,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("sarr", F.expr("transform(pairs, x -> x.shingle)"))
         .select("doc_id", "n", "sarr", "pref")
-        .localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+        .transform(materialize)
     )
     pa = inf.select(
         F.col("doc_id").alias("doc_small"),
@@ -1507,7 +1492,7 @@ def dedup_editdistance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: (doc_a, doc_b, edit_distance), pairs within the radius.
     """
-    sh = _informative_shingles(spark, sf_dir).localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+    sh = materialize(_informative_shingles(spark, sf_dir))
     a = sh.alias("a")
     b = sh.alias("b")
     cand = (

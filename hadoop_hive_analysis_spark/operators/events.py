@@ -16,7 +16,7 @@ Determinism:
 
 from __future__ import annotations
 
-from ..session import CKPT_LEVEL
+from ..session import materialize
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -613,7 +613,7 @@ def events_robust_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "events")
         .filter(F.col("value").isNotNull())
         .select("event_type", "event_id", F.expr(_VAL_CENTS).alias("cents"))
-        .localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+        .transform(materialize)
     )
     n = c.groupBy("event_type").agg(F.count("*").alias("n"))
     wv = Window.partitionBy("event_type").orderBy("cents", "event_id")
@@ -1536,7 +1536,7 @@ def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("prev_type").isNotNull())
         .groupBy("prev_type", F.col("event_type").alias("next_type"))
         .agg(F.count("*").alias("n"))
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     totals = tr.groupBy("prev_type").agg(F.sum("n").alias("row_total"))
     return (

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-from ..session import CKPT_LEVEL
+from ..session import materialize
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -719,7 +719,7 @@ def image_phash_neardup(df: DataFrame) -> DataFrame:
     sigs = image_ahash(df).where(F.col("decode_error").isNull()).select(
         "doc_id", "ahash"
     )
-    sigs = sigs.localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+    sigs = materialize(sigs)
     bands = sigs.select(
         "doc_id",
         "ahash",
@@ -1033,7 +1033,7 @@ def multimodal_dhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b.band").alias("band"),
             F.col("b.bkey").alias("bkey"),
         )
-        .localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+        .transform(materialize)
     )
     a = banded.alias("a")
     b = banded.alias("b")

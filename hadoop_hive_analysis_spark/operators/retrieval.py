@@ -45,7 +45,7 @@ the corpus.
 
 from __future__ import annotations
 
-from ..session import CKPT_LEVEL
+from ..session import materialize
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -86,9 +86,7 @@ def doc_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     for human consumption (one IEEE division of exact inputs).
     """
     d = load_table(spark, sf_dir, "documents")
-    ex = d.select(
-        "doc_id", F.explode(tokens("text")).alias("tok")
-    ).localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+    ex = materialize(d.select("doc_id", F.explode(tokens("text")).alias("tok")))
 
     dl = ex.groupBy("doc_id").agg(F.count("*").alias("dl"))
     totals = dl.agg(

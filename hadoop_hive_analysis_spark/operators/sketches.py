@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import materialize
 from ..sources.catalog import load_table
 
 
@@ -84,7 +85,7 @@ def eda_sketch_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("approx_percentile(l_extendedprice, array(0.5, 0.95, 0.99))").alias(
             "pcts"
         ),
-    ).localCheckpoint(eager=False)  # 1 row; feeds rank scan AND output
+    ).transform(materialize)  # 1 row; feeds rank scan AND output
     ex = li.agg(
         F.countDistinct("l_partkey").alias("n_parts"),
         F.countDistinct("l_suppkey").alias("n_suppliers"),
@@ -490,9 +491,7 @@ def doc_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import tokens
 
     d = load_table(spark, sf_dir, "documents")
-    ex = d.select(F.explode(tokens("text")).alias("tok")).localCheckpoint(
-        eager=False
-    )
+    ex = materialize(d.select(F.explode(tokens("text")).alias("tok")))
 
     # The closure must be SELF-CONTAINED (executors can't import this
     # package when the driver runs from a foreign cwd — cloudpickle

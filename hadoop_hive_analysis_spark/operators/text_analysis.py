@@ -13,7 +13,7 @@ frames) are materialized once and reused.
 
 from __future__ import annotations
 
-from ..session import CKPT_LEVEL
+from ..session import materialize
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -342,7 +342,7 @@ def doc_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = (
         toks.groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+        .transform(materialize)
     )
     df = tf.groupBy("term").agg(F.count("*").alias("df"))
     scored = tf.join(df, "term").withColumn(
@@ -416,7 +416,7 @@ def doc_token_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ex = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", F.explode(tokens("text")).alias("tok"))
-        .localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+        .transform(materialize)
     )
     counts = ex.groupBy("tok").agg(F.count("*").alias("c"))
     return (
@@ -512,17 +512,12 @@ def doc_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     struct-array verify cost 53 s — see
     ``git show 2c1af62:OPTIMIZATION_r20.md``.
 
-    The posting-list frame is checkpointed SERIALIZED (CKPT_LEVEL,
-    MEMORY_AND_DISK): it feeds both the norms pass and the pair
-    enumeration, and serialized flat buffers avoid the per-row on-heap
-    object accumulation measured in the r7/r8 audits (back-to-back
-    deserialized runs degraded 15.3s -> 8.7s -> 18.1s in one 8 GiB JVM).
-    It is also ~50× smaller than the old checkpoint (one row per capped
-    shingle, docs array + weight, no per-doc duplication of the shingle
-    string).
+    The posting-list frame is checkpointed (``session.materialize``): it
+    feeds both the norms pass and the pair enumeration. It is ~50×
+    smaller than the old checkpoint (one row per capped shingle, docs
+    array + weight, no per-doc duplication of the shingle string).
     """
     from ..operators.dedup import STOP_SHINGLE_DF, _doc_shingles
-    from ..session import CKPT_LEVEL
 
     # Full-width spread, NOT the r20 bytes-proportional default
     # (identical from sf1 up): unlike the other _doc_shingles consumers
@@ -547,7 +542,7 @@ def doc_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sort_array(F.collect_list("doc_id")).alias("docs"))
         .withColumn("w", F.expr(f"{TFIDF_SIM_SCALE} DIV size(docs)"))
         .select("docs", "w")
-        .localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+        .transform(materialize)
     )
     norms = (
         posting.select(F.explode("docs").alias("doc_id"), "w")
@@ -669,7 +664,7 @@ def source_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     st = (
         ex.groupBy("source", "tok")
         .agg(F.count("*").alias("c_st"))
-        .localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+        .transform(materialize)
     )
     tot_t = st.groupBy("tok").agg(F.sum("c_st").alias("c_t"))
     tot_s = st.groupBy("source").agg(F.sum("c_st").alias("n_s"))
@@ -780,7 +775,7 @@ def doc_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("bg"),
         )
         .select("doc_id", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
-        .localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+        .transform(materialize)
     )
     c12 = ex.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
     c1 = ex.groupBy("w1").agg(F.count("*").alias("c1"))
@@ -949,7 +944,7 @@ def doc_quality_ecdf(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(ECDF_BINS - 1),
             ).alias("bin"),
         )
-        .localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+        .transform(materialize)
     )
     hist = scored.groupBy("bin").agg(F.count("*").alias("n_bin"))
     w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
@@ -1120,7 +1115,7 @@ def corpus_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("bg")
         )
         .select(F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
-        .localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+        .transform(materialize)
     )
     uni = ex.select(F.col("w1").alias("w")).unionAll(
         ex.select(F.col("w2").alias("w"))
@@ -1310,7 +1305,7 @@ def doc_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         .select("doc_id", "sarr")
-        .localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+        .transform(materialize)
     )
     sh = sets.select("doc_id", F.explode("sarr").alias("shingle"))
     novel = (

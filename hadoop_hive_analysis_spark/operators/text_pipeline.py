@@ -19,7 +19,7 @@ Scale shapes:
 
 from __future__ import annotations
 
-from ..session import CKPT_LEVEL
+from ..session import materialize
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -114,7 +114,7 @@ def contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus_sets = (
         shingle_sets(d.filter(~bench_pred))
         .select("doc_id", "sarr")
-        .localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+        .transform(materialize)
     )
     bench_sh = (
         with_shingles(d.filter(bench_pred), "text")
@@ -708,7 +708,7 @@ def train_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = (
         base.orderBy(F.col("priority").desc(), F.col("doc_id").asc())
         .limit(PRIORITY_K + 1)
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     w = Window.orderBy(F.col("priority").desc(), F.col("doc_id").asc())
     ranked = top.withColumn("r", F.row_number().over(w))
@@ -1060,7 +1060,7 @@ def corpus_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(ECDF_BINS - 1),
             ).alias("qbin"),
         )
-        .localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+        .transform(materialize)
     )
     tot = scored.agg(F.sum("n_tokens").alias("total"))
     hist = scored.groupBy("qbin").agg(F.sum("n_tokens").alias("bin_tokens"))

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.frames import local_frame
+from ..session import materialize
 from ..sources.catalog import load_table
 from .similarity import _QUANT, _QUANT_SQL
 
@@ -1013,12 +1014,9 @@ def ivfpq_fit(spark: SparkSession, sf_dir: str, n_corpus: int | None = None):
             q.orderBy("vec_id")
             .limit(IVFPQ_FIT_PER_CELL * n_cells)
             .repartition(spark.sparkContext.defaultParallelism)
-            .localCheckpoint()
+            .transform(materialize)
         )
-        try:
-            cells = _lloyd_distributed(sample_df, n_cells, KMEANS_ROUNDS)
-        finally:
-            sample_df.unpersist()
+        cells = _lloyd_distributed(sample_df, n_cells, KMEANS_ROUNDS)
         mat = _ivf_sample(
             spark,
             sf_dir,

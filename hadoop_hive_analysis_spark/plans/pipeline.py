@@ -132,12 +132,12 @@ def corpus_clean_staged(
     sets = spark.read.parquet(sets_path)
 
     losers = (
-        # checkpoint_input=False: the set table is already durable
-        # parquet — each core branch re-scans the columnar files instead
-        # of caching a second in-memory copy (advisor r19; that second
-        # copy is exactly the block-manager pressure the staged layout
-        # exists to avoid at 100 TB)
-        minhash_pairs_from_shingle_sets(sets, checkpoint_input=False)
+        # No checkpoint: the set table is already durable parquet — each
+        # core branch re-scans the columnar files instead of caching a
+        # second in-memory copy (advisor r19; that second copy is exactly
+        # the block-manager pressure the staged layout exists to avoid at
+        # 100 TB)
+        minhash_pairs_from_shingle_sets(sets)
         .select(F.col("doc_b").alias("doc_id"))
         .distinct()
     )

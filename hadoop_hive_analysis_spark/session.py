@@ -17,30 +17,28 @@ import os
 from typing import NamedTuple
 
 from pyspark import StorageLevel
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 class ReleaseResult(NamedTuple):
     """Outcome of ``release_cached_blocks``: ``unpersisted`` registry
-    RDDs explicitly released, ``residual`` RDDs still holding blocks when
-    the drain poll gave up (0 = the JVM is back to fresh-block state)."""
+    RDDs explicitly released, ``residual`` RDDs still registered after
+    the release (0 = the JVM is back to fresh-block state)."""
 
     unpersisted: int
     residual: int
 
-# Storage level for corpus-scale localCheckpoint sites (shingle / token /
-# span / posting / edge frames). SERIALIZED, not the default deserialized
-# level: per-row on-heap objects thrash the GC during downstream sorts
-# and — because localCheckpoint blocks are freed asynchronously by the
-# ContextCleaner — ACCUMULATE across queries sharing one JVM. Measured
-# twice: the r8 tfidf A/B (SCALING.md, doc_tfidf_cosine_pairs — back-to-back
-# deserialized runs degrade 15.3→8.7→18.1 s in one 8 GiB JVM; serialized
-# levels them) and an r15 sf1 mini-pack A/B (6 dedup queries × 3 reps,
-# one JVM, interleaved vs the prior tree: serialized 131 s total vs
-# deserialized 158 s, worst first-rep outlier halved). Serialized blocks
-# are flat buffers ~5× smaller; MEMORY_AND_DISK spills only under
-# pressure. Deliberately-tiny checkpoints (1-row sketch rows, top-K+1
-# frames) keep the default — there is nothing to win.
+# Storage level of every checkpoint (``materialize``). SERIALIZED, not
+# the default deserialized level: per-row on-heap objects thrash the GC
+# during downstream sorts and accumulate across queries sharing one JVM.
+# Measured twice: the r8 tfidf A/B (SCALING.md, doc_tfidf_cosine_pairs —
+# back-to-back deserialized runs degrade 15.3→8.7→18.1 s in one 8 GiB
+# JVM; serialized levels them) and an r15 sf1 mini-pack A/B (6 dedup
+# queries × 3 reps, one JVM, interleaved vs the prior tree: serialized
+# 131 s total vs deserialized 158 s, worst first-rep outlier halved).
+# Serialized blocks are flat buffers, several times smaller
+# (doc_heavy_hitters' token explode at sf0.1: 22.74 MB deserialized,
+# 1.59 MB serialized); MEMORY_AND_DISK spills only under pressure.
 #
 # NB (advisor r19 adjudication): unlike Scala's MEMORY_AND_DISK,
 # *PySpark's* ``StorageLevel.MEMORY_AND_DISK`` is ``StorageLevel(True,
@@ -114,81 +112,55 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def release_cached_blocks(
-    spark: SparkSession, blocking: bool = True
-) -> ReleaseResult:
+def materialize(df: DataFrame) -> DataFrame:
+    """The engine's one materialization point: ``df`` as a non-eager
+    local checkpoint at ``CKPT_LEVEL``.
+
+    An operator materializes a frame that several branches read, or an
+    iteration's state, so each consumer scans the stored blocks instead
+    of re-running the lineage — the Spark analogue of the reference's
+    HDFS hand-off between chained MR jobs. Non-eager: the first action
+    that reads the frame stores it, so no extra job is scheduled.
+    ``release_cached_blocks`` frees the blocks between queries.
+    """
+    return df.localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+
+
+def release_cached_blocks(spark: SparkSession) -> ReleaseResult:
     """Synchronously free every persisted RDD block in the JVM — the
     deterministic release the ContextCleaner does not guarantee.
 
-    Non-eager ``localCheckpoint`` frames register with the BlockManager at
-    first materialization and are freed ASYNCHRONOUSLY: the ContextCleaner
-    only enqueues the cleanup after a *driver GC* collects the last
-    reference, so in a long-lived JVM running a query pack the blocks from
-    earlier queries ACCUMULATE and squeeze later queries' execution memory
-    (r15 sf1 sweep: ``dedup_embedding_lsh`` 42.1 s in-pack vs 3.3-3.8 s in
-    a fresh JVM — adjudicated to exactly this, VERDICT r15 item 2). No
+    Checkpointed frames (``materialize``) keep their blocks until the
+    ContextCleaner sees their RDD garbage-collected, which in a
+    long-lived JVM running a query pack may be never: blocks from earlier
+    queries ACCUMULATE and squeeze later queries' execution memory (r15
+    sf1 sweep: ``dedup_embedding_lsh`` 42.1 s in-pack vs 3.3-3.8 s in a
+    fresh JVM — adjudicated to exactly this, VERDICT r15 item 2). No
     operator reuses a checkpoint across queries (each ``queries()`` entry
     rebuilds its plan from the parquet scan), so a blocking unpersist of
     everything between queries reproduces the fresh-JVM condition without
     the JVM restart.
 
-    Two mechanisms, because checkpointed frames die two ways:
-    (1) frames still referenced (registered in ``sc.persistentRdds``) are
-    unpersisted directly, blocking until the BlockManager confirms;
-    (2) frames whose Python/JVM references were already dropped inside an
-    operator are invisible to the registry (weak values) but their BLOCKS
-    remain until a driver GC feeds the ContextCleaner's reference queue —
-    so force the GC and poll ``getRDDStorageInfo`` until the block list
-    is empty. The poll bails after ~0.5 s of ZERO progress (advisor r16):
-    if blocks cannot drain at all — ``-XX:+DisableExplicitGC``, or a
-    Spark-internal persisted RDD outside our control — spinning to the
-    30 s deadline on EVERY call (~3×/query across a ~129-query pack)
-    would silently turn a ~100 s bench into hours, for a drain that was
-    never going to happen. A few no-progress iterations of grace absorb
-    the cleaner thread's normal async latency; the 30 s deadline remains
-    as the cap for the slow-but-progressing case.
+    Every RDD that still holds blocks is listed in ``sc.persistentRdds``
+    (weak values), which ``getPersistentRDDs`` returns; an RDD drops off
+    that list only when the JVM collects it, and the same collection hands
+    it to the ContextCleaner, which frees its blocks. So one blocking
+    unpersist of the listed RDDs is the whole release. ``DataFrame.
+    unpersist()`` would not do: on a checkpointed frame it only touches
+    the CacheManager.
 
     Returns ``ReleaseResult(unpersisted, residual)``: the number of RDDs
-    explicitly unpersisted, and the number of RDDs still holding blocks
-    when the poll gave up (0 = fully drained). A nonzero residual is the
-    signal that in-pack block accumulation may be back — measurement
-    paths surface it (bench.py records the pack-wide max in
-    BENCH_FULL.json) instead of failing.
+    unpersisted, and the number still listed afterwards (0 = fully
+    released). A nonzero residual is the signal that in-pack block
+    accumulation may be back — measurement paths surface it (bench.py
+    records the pack-wide max in BENCH_FULL.json) instead of failing.
     """
     # cache()/persist()'d DataFrames keep CacheManager references that
     # would re-materialize; clear those first so the RDD sweep below is
     # the final word. (Checkpoint blocks are NOT in the CacheManager.)
     spark.catalog.clearCache()
-    sc = spark.sparkContext
-    jrdds = list(sc._jsc.getPersistentRDDs().values())
+    jsc = spark.sparkContext._jsc
+    jrdds = list(jsc.getPersistentRDDs().values())
     for jrdd in jrdds:
-        jrdd.unpersist(blocking)
-    residual = 0
-    if blocking:
-        import time as _time
-
-        def _drain_state() -> tuple[int, int]:
-            # progress metric = total cached PARTITIONS, not RDD count
-            # (advisor r17): a single large RDD draining block-by-block
-            # keeps the RDD count constant for >0.5 s and would trip the
-            # no-progress bail even though the drain was advancing —
-            # exactly the slow-but-progressing case the 30 s cap covers.
-            infos = list(sc._jsc.sc().getRDDStorageInfo())
-            return len(infos), sum(i.numCachedPartitions() for i in infos)
-
-        deadline = _time.monotonic() + 30.0
-        n_rdds, prev = _drain_state()
-        stalled = 0
-        while n_rdds > 0:
-            if _time.monotonic() > deadline:
-                residual = n_rdds
-                break  # leave residue to the ContextCleaner; best-effort
-            sc._jvm.System.gc()  # enqueue dropped-ref RDDs for the cleaner
-            _time.sleep(0.1)
-            n_rdds, cur = _drain_state()
-            stalled = stalled + 1 if cur >= prev else 0
-            if n_rdds > 0 and stalled >= 5:  # ~0.5 s with zero progress
-                residual = n_rdds
-                break
-            prev = cur
-    return ReleaseResult(len(jrdds), residual)
+        jrdd.unpersist(True)
+    return ReleaseResult(len(jrdds), len(jsc.getPersistentRDDs()))

@@ -19,7 +19,7 @@ the columnar copy (pushdown + pruning + stats, none of which JSON has).
 
 from __future__ import annotations
 
-from ..session import CKPT_LEVEL
+from ..session import materialize
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -61,7 +61,7 @@ def read_documents_jsonl(
         # the parse once lifts the restriction AND matches how this
         # reader is used (ingest-time conversion, every downstream read
         # runs on the parquet copy).
-        .localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+        .transform(materialize)
     )
     if keep_corrupt:
         return df

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import TESTDATA_SCHEMAS
+from ..session import materialize
 from ..sources.catalog import spread_small_scan, stream_files
 from .events import WATERMARK
 
@@ -188,16 +189,17 @@ def with_minhash_bands(docs: DataFrame) -> DataFrame:
     )
 
 
-def neardup_snapshot(docs: DataFrame, materialize: bool = True) -> DataFrame:
+def neardup_snapshot(docs: DataFrame) -> DataFrame:
     """The periodic LSH state snapshot a maintenance job persists: the
     corpus's banded signature table (doc_id, band, band_sig, sig) —
     near-dup analog of :func:`snapshot_digests`. One row per doc × band;
     carries the full signature so the ingest query can verify candidates
     without touching history text.
 
-    ``materialize`` (default) makes the returned frame behave like the
-    persisted table the pattern describes, which matters twice at scale
-    (both bit the r16 sf1 sweep as a 300 s broadcast timeout):
+    The returned frame is materialized (``session.materialize``) so it
+    behaves like the persisted table the pattern describes, which
+    matters twice at scale (both bit the r16 sf1 sweep as a 300 s
+    broadcast timeout):
 
     - the ~50×-CPU shingle→minhash pipeline is spread off the row-group-
       bound document scan (``spread_small_scan``) instead of inheriting
@@ -210,9 +212,6 @@ def neardup_snapshot(docs: DataFrame, materialize: bool = True) -> DataFrame:
       SHUFFLED rather than broadcasting a history table that grows with
       the corpus, exactly the plan a 100 TB deployment needs (the real
       maintenance job writes parquet; a scan of it behaves the same).
-
-    Pass ``materialize=False`` to get the raw lineage (e.g. to write the
-    snapshot out as the maintenance job itself would).
     """
     # explode_OUTER, deliberately: plain explode lets Catalyst infer a
     # ``size(bands) > 0`` filter (InferFiltersFromGenerate), which
@@ -222,7 +221,7 @@ def neardup_snapshot(docs: DataFrame, materialize: bool = True) -> DataFrame:
     # the exact compute the spread exists to parallelize. ``bands`` is a
     # literal fixed-length array (never null/empty past the token filter),
     # so outer-explode is value-identical and infers nothing.
-    snap = (
+    return materialize(
         with_minhash_bands(spread_small_scan(docs))
         .select("doc_id", F.explode_outer("bands").alias("b"), "sig")
         .select(
@@ -232,9 +231,6 @@ def neardup_snapshot(docs: DataFrame, materialize: bool = True) -> DataFrame:
             "sig",
         )
     )
-    if materialize:
-        snap = snap.localCheckpoint(eager=True)
-    return snap
 
 
 def neardup_hits_against_snapshot(
@@ -383,9 +379,7 @@ def documents_neardup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .events import run_available_now
 
-    snapshot = neardup_snapshot(
-        read_documents_table_even(spark, sf_dir)
-    )
+    snapshot = neardup_snapshot(read_documents_table_even(spark, sf_dir))
     # The replay's arrivals come from ONE parquet file, and a file-stream
     # scan does not split files — so each micro-batch plans the ~50x-CPU
     # shingle→minhash pipeline over ONE task no matter how many cores the

@@ -1,7 +1,9 @@
-"""Deterministic checkpoint-block release (judge r15 item 2).
+"""One checkpoint policy and its deterministic block release (judge r15
+item 2).
 
-Non-eager ``localCheckpoint`` frames are freed ASYNCHRONOUSLY by the
-ContextCleaner (driver GC → reference queue → cleaner thread), so in a
+Every checkpoint in the package goes through ``session.materialize``
+(non-eager, ``CKPT_LEVEL``). Checkpoint blocks are otherwise freed only
+when the ContextCleaner sees their RDD garbage-collected, so in a
 long-lived JVM running a query pack, blocks from earlier queries
 accumulate and squeeze later queries' execution memory — the r15 sf1
 sweep measured ``dedup_embedding_lsh`` at 42 s in-pack vs 3.3–3.8 s in a
@@ -13,14 +15,19 @@ checkpointed frame can be held:
 
 - still referenced (registered in ``sc.persistentRdds`` → direct
   blocking unpersist);
-- reference already dropped inside the operator (invisible to the
-  registry; the forced-GC poll path must still drain the blocks).
+- reference already dropped inside the operator (the RDD stays in
+  ``sc.persistentRdds`` until the JVM collects it, so the same
+  unpersist reaches it; once collected, the ContextCleaner frees it).
 """
 
 from __future__ import annotations
 
+from pathlib import Path
+
+import hadoop_hive_analysis_spark
 from hadoop_hive_analysis_spark.session import (
     CKPT_LEVEL,
+    materialize,
     release_cached_blocks,
 )
 
@@ -58,9 +65,7 @@ def test_release_frees_dropped_reference(spark):
     gc.collect()  # drop the py4j reference like a finished query does
     result = release_cached_blocks(spark)
     assert result.unpersisted >= 0  # may already be off the registry
-    # the GC-poll path must have DRAINED the dropped-reference blocks,
-    # not bailed: residual==0 distinguishes a real drain from the
-    # fast-bail path (advisor r16)
+    # the dropped-reference blocks are gone and nothing is left listed
     assert result.residual == 0
     assert _n_block_entries(spark) == 0
 
@@ -75,4 +80,39 @@ def test_release_after_checkpoint_heavy_operator(spark, sf_dir):
         "overwrite"
     ).save()
     release_cached_blocks(spark)
+    assert _n_block_entries(spark) == 0
+
+
+def test_materialize_is_the_only_checkpoint_site():
+    """One policy: the package checkpoints only through
+    ``session.materialize``, and no other module picks a storage level."""
+    pkg = Path(hadoop_hive_analysis_spark.__file__).parent
+    sites, level_users = [], []
+    for path in sorted(pkg.rglob("*.py")):
+        src = path.read_text()
+        rel = str(path.relative_to(pkg))
+        sites += [rel] * src.count(".localCheckpoint(")
+        if "CKPT_LEVEL" in src and rel != "session.py":
+            level_users.append(rel)
+    assert sites == ["session.py"]
+    assert level_users == []
+
+
+def test_materialize_schedules_no_job_and_release_frees_it(spark):
+    sc = spark.sparkContext
+    release_cached_blocks(spark)
+    group = "test_ckpt_release.materialize"
+    sc.setJobGroup(group, "materialize probe", False)
+    try:
+        df = materialize(spark.range(200_000))
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        assert _n_block_entries(spark) == 0
+        assert df.count() == 200_000  # the first action stores the blocks
+        assert sc.statusTracker().getJobIdsForGroup(group) != []
+    finally:
+        sc._jsc.clearJobGroup()
+    (info,) = sc._jsc.sc().getRDDStorageInfo()
+    assert not info.storageLevel().deserialized()  # CKPT_LEVEL, serialized
+    result = release_cached_blocks(spark)
+    assert result == (1, 0)
     assert _n_block_entries(spark) == 0
