@@ -84,6 +84,20 @@ SCALE_CONF: dict[str, str] = {
     # reference's drop-on-parse-failure semantics (SURVEY.md §2.2 P7/P8).
     "spark.sql.ansi.enabled": "false",
     "spark.sql.shuffle.partitions": "32",
+    # A broadcast keyed on a string or on several columns
+    # (UnsafeHashedRelation) allocates one whole Tungsten page however
+    # few its rows. Unset, the page is derived from driver heap ÷ cores:
+    # 1 MiB at local[32]/1g, 2 MiB at local[8]/1g, 4 MiB at local[4]/1g,
+    # 16 MiB at local[4]/2g, 64 MiB at local[4]/8g — so doc_heavy_hitters'
+    # 30-row candidate broadcast reported 16.0 MiB under perfbench's 2g
+    # driver. Pinned at 4 MiB: candidates 16.0 → 4.0 MiB, the
+    # dedup_minhash_lsh band table 16.5 → 4.5 MiB, perfbench dedup_corpus
+    # peak_jvm_mb median 125.1 → 102.0 MB (lower in 10/10 alternating
+    # fresh-JVM pairs, 4-vCPU VM). A task's page table holds 8,192 pages,
+    # so the per-task ceiling stays 32 GiB; 1m and 2m saved only ~5 MB
+    # more (one run each).
+    # Single-long-key broadcasts (LongHashedRelation) do not use the page.
+    "spark.buffer.pageSize": "4m",
 }
 
 
@@ -120,7 +134,12 @@ def materialize(df: DataFrame) -> DataFrame:
     iteration's state, so each consumer scans the stored blocks instead
     of re-running the lineage — the Spark analogue of the reference's
     HDFS hand-off between chained MR jobs. Non-eager: the first action
-    that reads the frame stores it, so no extra job is scheduled.
+    that reads the frame stores it, so a frame of scans and narrow
+    operators schedules no job at the call. A frame over a shuffle
+    exchange does: under AQE, building its checkpoint RDD runs the
+    exchange's map stage then (one job for
+    ``spark.range(100_000).repartition(4)``), so e.g. ``spread_small_scan``'s
+    round-robin spread runs while the operator builds its DataFrame.
     ``release_cached_blocks`` frees the blocks between queries.
     """
     return df.localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)

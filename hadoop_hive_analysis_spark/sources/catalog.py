@@ -55,6 +55,21 @@ def _footer_schema(spark: SparkSession, path: str) -> StructType:
     return _FOOTER_CACHE[key]
 
 
+def _nanos_columns(spark: SparkSession, path: str, declared: StructType) -> list[str]:
+    """The declared ``TimestampType`` columns that ``path`` stores as
+    TIMESTAMP(NANOS) (raw ``LongType`` in the footer).
+
+    Only a declared timestamp needs the footer, so a timestamp-free
+    schema (``documents``, ``embeddings`` and the dimension tables) skips
+    the sniff and its parquet schema-inference job.
+    """
+    ts_cols = [f.name for f in declared.fields if isinstance(f.dataType, TimestampType)]
+    if not ts_cols:
+        return []
+    footer = {f.name: f.dataType for f in _footer_schema(spark, path).fields}
+    return [c for c in ts_cols if isinstance(footer.get(c), LongType)]
+
+
 def _read_with_declared(
     spark: SparkSession, path: str, declared: StructType
 ) -> DataFrame:
@@ -76,17 +91,11 @@ def _read_with_declared(
       to microsecond timestamps with INTEGER division — float division
       would lose precision at 1e18 nanos.
     """
-    footer = {f.name: f.dataType for f in _footer_schema(spark, path).fields}
-    read_fields: list[StructField] = []
-    nanos_cols: list[str] = []
-    for f in declared.fields:
-        if isinstance(f.dataType, TimestampType) and isinstance(
-            footer.get(f.name), LongType
-        ):
-            read_fields.append(StructField(f.name, LongType(), True))
-            nanos_cols.append(f.name)
-        else:
-            read_fields.append(StructField(f.name, f.dataType, True))
+    nanos_cols = _nanos_columns(spark, path, declared)
+    read_fields = [
+        StructField(f.name, LongType() if f.name in nanos_cols else f.dataType, True)
+        for f in declared.fields
+    ]
     df = spark.read.schema(StructType(read_fields)).parquet(path)
     for c in nanos_cols:
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"{c} DIV 1000")))
@@ -436,15 +445,7 @@ def register_external_tables(spark: SparkSession, sf_dir: str) -> None:
     for name in TESTDATA_TABLES:
         path = f"{sf_dir}/{name}.parquet"
         declared = TESTDATA_SCHEMAS[name]
-        footer = {
-            f.name: f.dataType for f in _footer_schema(spark, path).fields
-        }
-        nanos_cols = [
-            f.name
-            for f in declared.fields
-            if isinstance(f.dataType, TimestampType)
-            and isinstance(footer.get(f.name), LongType)
-        ]
+        nanos_cols = _nanos_columns(spark, path, declared)
         _drop_relation(spark, f"{EXT_DB}.{name}")
         _drop_relation(spark, f"{EXT_DB}.{name}_raw")
         if not nanos_cols:

@@ -2,7 +2,9 @@
 """Scale-up curves for registry entries, each point checked against the
 entry's DuckDB oracle.
 
-Usage: python scripts/scale.py QUERY... [MULT...]   (default mults 1 2 5 10)
+Usage: SPARK_GRAFT_CPUS=$(nproc) python scripts/scale.py QUERY... [MULT...]
+(default mults 1 2 5 10). Export ``SPARK_GRAFT_CPUS``: without it the
+session falls back to ``local[32]``, whatever the host has.
 
 For each multiplier one scaled sf_dir is written from
 ``$SPARK_GRAFT_SF_DIR`` (default: the sf0.1 fixture, as in bench.py).
@@ -24,7 +26,9 @@ replays' file glob both expect):
 
 Every other table is linked unchanged. Each entry runs twice to a noop
 sink, with blocks released between runs (untimed); the best wall is kept.
-One JSON line per point, then one summary line. ``cpu_s`` is the
+One JSON line per point, then one summary line. Each point records
+what it ran at: ``cores`` (``sc.defaultParallelism``) and ``page_mb``
+(the Tungsten page, which sizes a string-keyed broadcast). ``cpu_s`` is the
 executor CPU of the best run's job group (and of the streaming runs it
 started); ``oracle_ok`` compares the result's value hash with DuckDB's on
 the same scaled dir, and a mismatch makes the exit code non-zero.
@@ -188,6 +192,11 @@ def scale_points(spark, names: list[str], mults: list[int], base_dir: str):
     if unknown:
         raise KeyError(f"not registry entries: {unknown}")
     counters, watch = SparkCounters(spark), _StreamWatch()
+    sc = spark.sparkContext
+    ran_at = {
+        "cores": sc.defaultParallelism,
+        "page_mb": sc._jsc.sc().env().memoryManager().pageSizeBytes() / 2**20,
+    }
     spark.streams.addListener(watch)
     try:
         for mult in mults:
@@ -196,7 +205,8 @@ def scale_points(spark, names: list[str], mults: list[int], base_dir: str):
                 try:
                     for n in names:
                         if (n in REPLICATED_DOCS) == replicate_docs:
-                            yield {"query": n, "mult": mult, **_point(spark, counters, watch, n, d)}
+                            point = _point(spark, counters, watch, n, d)
+                            yield {"query": n, "mult": mult, **ran_at, **point}
                 finally:
                     shutil.rmtree(d, ignore_errors=True)
     finally:

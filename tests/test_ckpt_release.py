@@ -116,3 +116,26 @@ def test_materialize_schedules_no_job_and_release_frees_it(spark):
     result = release_cached_blocks(spark)
     assert result == (1, 0)
     assert _n_block_entries(spark) == 0
+
+
+def test_materialize_runs_an_exchange_map_stage_at_the_call(spark):
+    """Non-eager is not job-free under AQE: building the checkpoint RDD
+    of a frame over a shuffle exchange runs that exchange's map stage at
+    the call. A frame of scans and narrow operators schedules nothing."""
+    sc = spark.sparkContext
+    release_cached_blocks(spark)
+    frames = {
+        "round_robin": spark.range(100_000).repartition(4).selectExpr("id*2 AS x"),
+        "scan_only": spark.range(100_000).selectExpr("id*2 AS x"),
+    }
+    jobs = {}
+    try:
+        for name, df in frames.items():
+            group = f"test_ckpt_release.{name}"
+            sc.setJobGroup(group, name, False)
+            materialize(df)
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc._jsc.clearJobGroup()
+        release_cached_blocks(spark)
+    assert jobs == {"round_robin": 1, "scan_only": 0}

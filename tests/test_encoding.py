@@ -144,6 +144,33 @@ def test_no_lingering_session_conf_mutation(spark, tmp_path):
     )
 
 
+def test_timestamp_free_cold_load_schedules_no_job(spark, tmp_path):
+    """Only a declared timestamp column needs the footer sniff, a parquet
+    schema-inference job. A table without one loads without any job,
+    even on a file the footer cache has never seen."""
+    import shutil
+
+    from pyspark.sql.types import TimestampType
+
+    names = [
+        n
+        for n, schema in TESTDATA_SCHEMAS.items()
+        if not any(isinstance(f.dataType, TimestampType) for f in schema.fields)
+    ]
+    assert "documents" in names and "orders" not in names
+    for n in names:
+        shutil.copy(f"{_BASE_SF}/{n}.parquet", tmp_path / f"{n}.parquet")
+    sc = spark.sparkContext
+    group = "test_encoding.cold_load"
+    sc.setJobGroup(group, "cold timestamp-free loads", False)
+    try:
+        for n in names:
+            load_table(spark, str(tmp_path), n)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    finally:
+        sc._jsc.clearJobGroup()
+
+
 def test_footer_cache_invalidates_on_rewrite(spark, tmp_path):
     """A fixture rewritten IN PLACE (same path, new encoding) must be
     re-sniffed: the footer cache fingerprints size+mtime, not path alone
