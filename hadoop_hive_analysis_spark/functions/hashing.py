@@ -6,8 +6,7 @@ chars of md5 (60 bits, always positive in int64) and parse as base-16.
 Verified bit-identical across engines including UTF-8 inputs.
 
 At 100 TB this is still the right shape: md5 is JVM-side, vectorizable by
-codegen, and cheap relative to shuffle; swap to ``xxhash64`` via
-``fast=True`` when oracle parity is not required (pure-Spark pipelines).
+codegen, and cheap relative to shuffle.
 
 MinHash machinery: universal-hash family h_j(x) = (a_j * x + b_j) mod P
 over the 31-bit reduction of the base hash; all arithmetic stays in int64
@@ -43,11 +42,9 @@ from pyspark.sql import functions as F
 MERSENNE_31 = 2_147_483_647
 
 
-def h64(col: Column | str, *, fast: bool = False) -> Column:
+def h64(col: Column | str) -> Column:
     """60-bit deterministic hash of a string column (portable to DuckDB)."""
     c = F.col(col) if isinstance(col, str) else col
-    if fast:
-        return F.xxhash64(c)
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
@@ -75,11 +72,12 @@ def h31_spark_sql(expr: str) -> str:
     return f"({h64_spark_sql(expr)} % {MERSENNE_31})"
 
 
-def minhash_params(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
-    """Deterministic (a_j, b_j) pairs via a fixed LCG — NO runtime RNG, so
-    the Spark plan and the oracle SQL embed the same constants."""
+def minhash_params(num_hashes: int) -> list[tuple[int, int]]:
+    """Deterministic (a_j, b_j) pairs via a fixed LCG from seed 42 — NO
+    runtime RNG, so the Spark plan and the oracle SQL embed the same
+    constants."""
     params = []
-    state = seed
+    state = 42
     for _ in range(num_hashes):
         state = (state * 1_103_515_245 + 12_345) % (1 << 31)
         a = (state % (MERSENNE_31 - 1)) + 1  # a in [1, P-1]

@@ -29,16 +29,6 @@ REVENUE_DECIMAL = (
 )
 
 
-def sum_revenue_sql(alias: str = "revenue") -> str:
-    """``SUM(...)`` fragment producing the exact revenue as DOUBLE."""
-    return f"SUM({REVENUE_CENTS}) / {REVENUE_CENTS_SCALE} AS {alias}"
-
-
-def cents_sum_sql(col: str, alias: str) -> str:
-    """Exact sum of a 2-decimal money column as DOUBLE via integer cents."""
-    return f"SUM(CAST(round({col} * 100, 0) AS BIGINT)) / 100.0 AS {alias}"
-
-
 # ------------------------------------------------- runtime overflow guard
 #
 # The int-cents formulation is bit-exact only while the group sum stays

@@ -25,10 +25,6 @@ def tokens(col: Column | str) -> Column:
     return F.split(c, WS)
 
 
-def token_count(col: Column | str) -> Column:
-    return F.size(tokens(col))
-
-
 def shingles(tok_array_name: str, n: int = 3) -> Column:
     """Word n-gram array over a named token-array column (Spark arrays are
     0-indexed).
@@ -44,13 +40,15 @@ def shingles(tok_array_name: str, n: int = 3) -> Column:
     )
 
 
-def with_shingles(df, text_col: str, n: int = 3, out: str = "shingle"):
+def with_shingles(df, text_col: str, n: int = 3):
     """Explode distinct word n-grams per row: (…, shingle) — the input to
     MinHash / Jaccard dedup. Distinct-per-doc matches set semantics."""
     d = df.withColumn("__shingle_toks", tokens(text_col))
     d = d.filter(F.size("__shingle_toks") >= n)
     d = d.select(
-        "*", F.explode(F.array_distinct(shingles("__shingle_toks", n))).alias(out)
+        "*", F.explode(F.array_distinct(shingles("__shingle_toks", n))).alias(
+            "shingle"
+        )
     )
     return d.drop("__shingle_toks")
 

@@ -8,7 +8,7 @@ the large-scale pipeline surface beyond reference parity:
 * ``similarity`` — brute-force & LSH ANN, embedding-cosine near-dup
 * ``text_analysis`` — token stats, quality, language ID, fingerprints
 * ``events`` — tumbling windows, sessionization, as-of join (batch)
-* ``asof`` — generic as-of join (columnar + pandas merge_asof forms)
+* ``asof`` — generic as-of join (union + carry-forward)
 * ``skew`` — salted two-phase aggregation
 * ``sketches`` — approx/HLL profiling (EDA at scale)
 * ``multimodal`` — binary payload columns, Arrow-batched decode stubs

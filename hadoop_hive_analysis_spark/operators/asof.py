@@ -1,15 +1,11 @@
-"""Generic as-of join operator — two scale-appropriate implementations.
+"""Generic as-of join operator.
 
 ``asof_join``: the union-and-carry-forward formulation (ONE shuffle on the
 ``by`` key, linear scan per key — no range-join blow-up). Spark has no
 native as-of join; this is the composition the engine standardizes on.
 
-``asof_join_pandas``: Arrow-batched ``applyInPandas`` per ``by``-group
-using ``pandas.merge_asof`` — the alternative when per-group data fits in
-memory and the pandas semantics (tolerance, nearest) are wanted. Tested
-equal to the columnar form.
-
-Used by ``operators.events.events_asof_join`` (oracle: DuckDB ASOF JOIN).
+Used by ``operators.events.events_asof_join`` (oracle: DuckDB ASOF JOIN);
+``tests/test_properties.py`` checks it against a Python bisect.
 """
 
 from __future__ import annotations
@@ -25,11 +21,11 @@ def asof_join(
     on: str,
     by: str,
     right_cols: list[str],
-    suffix: str = "_right",
 ) -> DataFrame:
     """For each left row, attach the right row with the greatest ``on``
     value ≤ the left's, within the same ``by`` group (inner semantics:
-    left rows with no prior right row are dropped).
+    left rows with no prior right row are dropped). A right column whose
+    name is also a left column comes out as ``<name>_right``.
 
     Right rows sort before left rows at identical ``on`` values, giving
     "at-or-before" semantics.
@@ -60,54 +56,7 @@ def asof_join(
     )
     out = carried.filter(F.col("__tag") == 1).filter(F.col("__last").isNotNull())
     sel = [F.col(f"__linfo.{c}").alias(c) for c in left.columns] + [
-        F.col(f"__last.{c}").alias(f"{c}{suffix}" if c in left.columns else c)
+        F.col(f"__last.{c}").alias(f"{c}_right" if c in left.columns else c)
         for c in right_cols
     ]
     return out.select(*sel)
-
-
-def asof_join_pandas(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    on: str,
-    by: str,
-    right_cols: list[str],
-    suffix: str = "_right",
-) -> DataFrame:
-    """``pandas.merge_asof`` per ``by`` group via applyInPandas (Arrow).
-
-    Scale shape: one shuffle to co-group both sides on ``by``; per-group
-    pandas merge. Appropriate when single-group data fits an executor.
-    """
-    # Rename right output columns upfront (merge_asof requires identical
-    # on/by names in both frames; everything else must not collide).
-    rmap = {c: (f"{c}{suffix}" if c in left.columns else c) for c in right_cols}
-    rsel = [F.col(by), F.col(on).alias("__ron")] + [
-        F.col(c).alias(rmap[c]) for c in right_cols
-    ]
-    r = right.select(*rsel)
-
-    rschema = {f.name: f.dataType.simpleString() for f in r.schema.fields}
-    out_schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in left.schema.fields]
-        + [f"{rmap[c]} {rschema[rmap[c]]}" for c in right_cols]
-    )
-    lcols = list(left.columns)
-    out_cols = lcols + [rmap[c] for c in right_cols]
-    on_col, by_col = on, by
-    first_r = rmap[right_cols[0]]
-
-    def merge(ldf, rdf):
-        import pandas as pd
-
-        if len(ldf) == 0 or len(rdf) == 0:
-            return pd.DataFrame({c: [] for c in out_cols})
-        ldf = ldf.sort_values(on_col)
-        rdf = rdf.rename(columns={"__ron": on_col}).sort_values(on_col)
-        m = pd.merge_asof(ldf, rdf, on=on_col, by=by_col, direction="backward")
-        m = m.dropna(subset=[first_r])
-        return m[out_cols]
-
-    grouped = left.groupBy(by).cogroup(r.groupBy(by))
-    return grouped.applyInPandas(merge, out_schema)

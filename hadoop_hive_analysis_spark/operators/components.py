@@ -5,18 +5,13 @@ must become CLUSTERS (transitive closure) so each group keeps exactly one
 canonical document — pairs alone would keep B when A~B and B~C but A≁C
 dropped the wrong docs.
 
-Two implementations, same output contract (and the same oracle):
-
-* :func:`connected_components` — iterative min-label propagation: each
-  iteration is one join + aggregation, convergence detected from an
-  AGGREGATED count (never collecting the data). O(diameter) iterations;
-  near-dup graphs are unions of small cliques, so 2-3 in practice.
-* :func:`connected_components_bigstar` — large-star/small-star
-  alternation: chains halve per round, so convergence is
-  diameter-independent — the safe choice for unknown graph shapes.
-
-Both raise rather than emit wrong labels when the round cap is hit;
-per-round checkpointing truncates lineage.
+One implementation, :func:`connected_components_bigstar`: exact
+driver-side union-find when the deduplicated edge list fits
+``SMALL_GRAPH_EDGE_CAP``, large-star/small-star alternation above it.
+Star contraction halves chains per round, so convergence is
+diameter-independent; the loop raises rather than emit wrong labels
+when the round cap is hit, and per-round checkpointing truncates
+lineage.
 
 Oracle: DuckDB ``WITH RECURSIVE`` transitive closure + min-reachable —
 the declarative twin of the same fixpoint.
@@ -91,59 +86,6 @@ def _components_driver_side(cur: DataFrame) -> DataFrame:
     return local_frame(cur.sparkSession, out, schema)
 
 
-def connected_components(edges: DataFrame, src: str, dst: str) -> DataFrame:
-    """Min-label propagation over undirected edges → (node, component).
-
-    ``component`` is the smallest node id reachable from ``node``.
-    """
-    # Materialize the edge list ONCE and truncate its lineage BEFORE the
-    # symmetrizing union (the union's two branches would otherwise each
-    # re-execute the upstream pipeline, and every iteration takes an
-    # action on top — measured 17 s vs ~2 s at sf0.1 over MinHash edges).
-    # Per-iteration label checkpoints stop the plan growing with the
-    # iteration count (the standard Spark iterative-algorithm pattern).
-    # Non-eager (r19): the labels-init distinct is the materializing
-    # action, so setup costs one job instead of two; the union's two
-    # branches land inside that same job and still read the one cached
-    # copy.
-    edges = edges.select(F.col(src).alias("eu"), F.col(dst).alias("ev"))
-    edges = materialize(edges)
-    sym = edges.union(edges.select(F.col("ev").alias("eu"), F.col("eu").alias("ev")))
-    labels = sym.select(F.col("eu").alias("node")).distinct().withColumn(
-        "label", F.col("node")
-    )
-
-    for _ in range(MAX_ITERATIONS):
-        neighbor_min = (
-            sym.join(labels, F.col("ev") == F.col("node"))
-            .groupBy(F.col("eu").alias("nm_node"))
-            .agg(F.min("label").alias("nmin"))
-        )
-        updated = labels.join(
-            neighbor_min, F.col("node") == F.col("nm_node"), "left"
-        ).select(
-            "node",
-            F.least(F.col("label"), F.coalesce("nmin", "label")).alias("new_label"),
-            F.col("label").alias("old_label"),
-        )
-        # Convergence from an aggregated scalar — no data to the driver.
-        # Non-eager (r19): the changed-count below is the materializing
-        # action, so each iteration costs one scheduled job, not two.
-        updated = materialize(updated)
-        changed = updated.filter(F.col("new_label") < F.col("old_label")).count()
-        labels = updated.select("node", F.col("new_label").alias("label"))
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"min-label propagation did not converge in {MAX_ITERATIONS} "
-            f"iterations — component diameter exceeds the cap; use "
-            f"connected_components_bigstar for unknown-diameter graphs"
-        )
-
-    return labels.select("node", F.col("label").alias("component"))
-
-
 def _symmetrize(edges: DataFrame) -> DataFrame:
     return edges.union(
         edges.select(F.col("ev").alias("eu"), F.col("eu").alias("ev"))
@@ -200,12 +142,10 @@ def connected_components_bigstar(
     Components in MapReduce and Beyond") → (node, component).
 
     Each round halves long chains instead of walking them one hop:
-    O(log n) rounds in practice (O(log² n) proven worst case) where
-    :func:`connected_components` (min-label propagation) needs
-    O(diameter) iterations — the safe choice when cluster diameters are
-    unknown. Both loops RAISE rather than return wrong labels if the
-    round cap is hit. Fixpoint detection is exact (count + one
-    ``exceptAll``, aggregated — no data to the driver); per-round
+    O(log n) rounds in practice (O(log² n) proven worst case), whatever
+    the cluster diameter. The loop RAISES rather than return wrong
+    labels if the round cap is hit. Fixpoint detection is exact (count +
+    one ``exceptAll``, aggregated — no data to the driver); per-round
     ``localCheckpoint`` truncates lineage.
 
     Small-graph fast path: when the deduplicated edge count (which the
@@ -258,20 +198,6 @@ def connected_components_bigstar(
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clusters: MinHash-LSH pairs → components → per-doc
     (doc_id, cluster_id, is_canonical). Canonical = min doc in cluster."""
-    pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    comp = connected_components(pairs, "doc_a", "doc_b")
-    return comp.select(
-        F.col("node").alias("doc_id"),
-        F.col("component").alias("cluster_id"),
-        (F.col("node") == F.col("component")).alias("is_canonical"),
-    )
-
-
-def dedup_clusters_bigstar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """:func:`dedup_clusters` computed by the large-star/small-star
-    alternation instead of min-label propagation — same output contract
-    (checked against the same recursive-CTE oracle), O(log n) rounds
-    instead of O(diameter) iterations."""
     pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
     comp = connected_components_bigstar(pairs, "doc_a", "doc_b")
     return comp.select(

@@ -730,26 +730,35 @@ def _ivf_sample(spark: SparkSession, sf_dir: str, n: int = IVF_FIT_SAMPLE):
     return np.array([r.q for r in sample], dtype=np.int64)
 
 
-def _ivf_centroids(spark: SparkSession, sf_dir: str):
-    """The coarse-quantizer FIT alone: first ``IVF_FIT_SAMPLE`` vectors
-    by vec_id (TakeOrderedAndProject — driver memory bounded by the
-    sample whatever the corpus size), centroids initialized from the
-    first N_CELLS sample rows, KMEANS_ROUNDS exact-int64 Lloyd rounds.
-    Returns the centroid matrix. (The IVF-PQ composition in
-    :mod:`.vectors` fits on its OWN, larger cell-scaled sample via
-    ``ivfpq_fit`` — it does not share this collect; advisor r17 removed
-    the dead ``(sample, centroids)`` tuple that claimed otherwise.)"""
-    mat = _ivf_sample(spark, sf_dir)
-    cent = mat[:N_CELLS].copy()
-    for _ in range(KMEANS_ROUNDS):
-        # squared L2 to each centroid, exact int64
-        d2 = ((mat[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-        assign = d2.argmin(axis=1)  # ties → lowest cell id (argmin)
-        for c in range(N_CELLS):
+def _lloyd_np(mat, k: int, iters: int):
+    """Driver-side exact-int64 Lloyd on a bounded sample matrix: init =
+    first k rows (vec_id order — deterministic, no RNG), argmin ties to
+    the lowest index, integer floor-division means, and the matmul
+    distance identity so temporaries stay (n x k), never (n x k x d)."""
+    cent = mat[: min(k, len(mat))].copy()
+    for _ in range(iters):
+        d2 = (
+            (mat * mat).sum(axis=1)[:, None]
+            - 2 * (mat @ cent.T)
+            + (cent * cent).sum(axis=1)[None, :]
+        )
+        assign = d2.argmin(axis=1)
+        for c in range(len(cent)):
             members = mat[assign == c]
             if len(members):
                 cent[c] = members.sum(axis=0) // len(members)
     return cent
+
+
+def _ivf_centroids(spark: SparkSession, sf_dir: str):
+    """The coarse-quantizer FIT alone: first ``IVF_FIT_SAMPLE`` vectors
+    by vec_id (TakeOrderedAndProject — driver memory bounded by the
+    sample whatever the corpus size), then :func:`_lloyd_np` with
+    N_CELLS cells and KMEANS_ROUNDS rounds. Returns the centroid matrix.
+    (The IVF-PQ composition in :mod:`.vectors` fits on its OWN, larger
+    cell-scaled sample via ``ivfpq_fit`` — it does not share this
+    collect.)"""
+    return _lloyd_np(_ivf_sample(spark, sf_dir), N_CELLS, KMEANS_ROUNDS)
 
 
 def _ivf_assignments(spark: SparkSession, sf_dir: str):

@@ -3,9 +3,9 @@
 AQE's skew-join splitting handles skewed JOINS automatically, but a
 grouped aggregation whose key distribution is pathological (one hot key
 receiving most rows) still funnels every hot-key row into one reduce
-partition. Salting splits each key into ``n_salts`` sub-keys for a first
+partition. Salting splits each key into ``N_SALTS`` sub-keys for a first
 partial aggregation, then re-aggregates the (tiny) salted partials — the
-hot key's rows spread across ``n_salts`` partitions.
+hot key's rows spread across ``N_SALTS`` partitions.
 
 Correctness is engine-checkable because SUM/COUNT are associative: the
 salted result is definitionally equal to the plain groupBy (the oracle
@@ -14,7 +14,7 @@ row-unique column so both phases are deterministic.
 
 At 100 TB: use for known-skewed dimensions (null-heavy keys, power-law
 user ids). Cost: one extra (cheap) shuffle of pre-aggregated partials —
-``n_salts × distinct_keys`` rows.
+``N_SALTS × distinct_keys`` rows.
 """
 
 from __future__ import annotations
@@ -34,14 +34,13 @@ def salted_grouped_sum(
     measure: Column,
     alias: str,
     salt_source: str,
-    n_salts: int = N_SALTS,
 ) -> DataFrame:
     """SUM(measure) GROUP BY key, executed as salted two-phase aggregation.
 
     ``salt_source``: any row-level column with high cardinality (e.g. the
-    row's primary key); its hash mod n_salts spreads each group's rows.
+    row's primary key); its hash mod N_SALTS spreads each group's rows.
     """
-    salt = (h64(F.col(salt_source).cast("string")) % F.lit(n_salts)).alias("__salt")
+    salt = (h64(F.col(salt_source).cast("string")) % F.lit(N_SALTS)).alias("__salt")
     partial = (
         df.select(F.col(key), measure.alias("__m"), salt)
         .groupBy(key, "__salt")
@@ -106,7 +105,7 @@ def events_top3_by_hotkey_salted(spark, sf_dir: str) -> DataFrame:
     :func:`events_share_of_key_total`.
 
     Phase 1: rank within (key, salt) — the hot key's sort spreads over
-    N_SALTS tasks; keep each salt's top-3 (≤ n_salts×3 rows per key).
+    N_SALTS tasks; keep each salt's top-3 (≤ N_SALTS×3 rows per key).
     Phase 2: re-rank the survivors within key — trivially small.
     Output is identical to the plain window form (the DuckDB oracle).
     """

@@ -871,24 +871,6 @@ def _ivfpq_cells(n_vectors: int) -> int:
     return max(N_CELLS, -(-n_vectors // IVFPQ_CELL_OCCUPANCY))
 
 
-def _lloyd_np(mat, k: int, iters: int):
-    """Driver-side exact-int64 Lloyd on a bounded sample matrix: init =
-    first k rows (vec_id order — deterministic, no RNG), argmin ties to
-    the lowest index, integer floor-division means, and the matmul
-    distance identity so temporaries stay (n x k), never (n x k x d)."""
-    cent = mat[: min(k, len(mat))].copy()
-    for _ in range(iters):
-        d2 = (
-            (mat * mat).sum(axis=1)[:, None]
-            - 2 * (mat @ cent.T)
-            + (cent * cent).sum(axis=1)[None, :]
-        )
-        assign = d2.argmin(axis=1)
-        for c in range(len(cent)):
-            members = mat[assign == c]
-            if len(members):
-                cent[c] = members.sum(axis=0) // len(members)
-    return cent
 # Measured mean recall@5 with the deterministic first-K init (see
 # tests/test_similarity.py + SCALING.md): comfortably above 0.70 at
 # every driver scale and at 10x. Floor below observed minimum w/ margin.
@@ -908,8 +890,8 @@ def _lloyd_distributed(sample_df, n_cells: int, iters: int):
     """Distributed exact-int64 Lloyd over a (vec_id, q) sample FRAME —
     the coarse-fit path past IVFPQ_DRIVER_FIT_MAX_CELLS cells, where
     the driver sample matrix and its n x k distance temporaries stop
-    being bounded. Semantics match :func:`_lloyd_np` step for step
-    (init = first n_cells sample rows by vec_id, argmin ties to the
+    being bounded. Semantics match :func:`.similarity._lloyd_np` step
+    for step (init = first n_cells sample rows by vec_id, argmin ties to the
     lowest cell, integer floor-division means, empty cells keep their
     centroid), so the two fits are BIT-IDENTICAL on the same sample —
     pinned in tests/test_similarity.py, which also forces this path at
@@ -989,6 +971,7 @@ def ivfpq_fit(spark: SparkSession, sf_dir: str, n_corpus: int | None = None):
         IVF_FIT_SAMPLE,
         KMEANS_ROUNDS,
         _ivf_sample,
+        _lloyd_np,
         _quantized,
     )
 

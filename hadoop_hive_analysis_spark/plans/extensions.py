@@ -189,31 +189,22 @@ def build() -> dict:
         "predicate within bands; all-pairs baseline is pytest-only)",
     )
 
-    # --- Dedup clustering (iterative) ---
+    # --- Dedup clustering ---
     from ..operators import components
 
-    # bigstar shares this oracle and is the scale-preferred
-    # (diameter-safe) member of the pair.
     q["dedup_clusters"] = QuerySpec(
         components.dedup_clusters,
         components.DEDUP_CLUSTERS_SQL,
-        "ext: connected components over near-dup pairs (iterative min-label "
-        "propagation vs recursive-CTE oracle)",
+        "ext: connected components over near-dup pairs (union-find, "
+        "large-star/small-star above the edge cap, vs recursive-CTE oracle)",
     )
     # Round-5 addition: the end-to-end deliverable (surviving corpus
-    # after collapse). Promoted in the round-6 rotation (slot from
-    # dedup_clusters_bigstar, which it RUNS internally).
+    # after collapse), on the same components as dedup_clusters.
     q["dedup_collapse"] = QuerySpec(
         components.dedup_collapse,
         components.DEDUP_COLLAPSE_SQL,
         "ext: near-dup collapse to the surviving corpus (LSH pairs -> "
         "star-contraction components -> broadcast anti join)",
-    )
-    q["dedup_clusters_bigstar"] = QuerySpec(
-        components.dedup_clusters_bigstar,
-        components.DEDUP_CLUSTERS_SQL,  # same contract, different algorithm
-        "ext: same clusters via large-star/small-star alternation "
-        "(O(log n) rounds — diameter-safe where min-label is not)",
     )
     # Round-7 addition, staged for the r8 rotation: the SEMANTIC
     # (embedding-space) twin of dedup_collapse — paraphrase/re-encode

@@ -115,7 +115,7 @@ def q2_store_profit_employees(
     return top_k(out, [F.col("s_store_sk").asc()], k)
 
 
-def q1a_sql(k: int, date_lo: int, date_hi: int, table: str = "store_sales") -> str:
+def q1a_sql(k: int, date_lo: int, date_hi: int) -> str:
     """SQL dual of q1a — the engine's second entry point (SURVEY.md §3.4),
     mirroring the reference's Hadoop/Hive duality with zero duplicated
     logic differences: Catalyst compiles both to the same plan. The SQL
@@ -123,7 +123,7 @@ def q1a_sql(k: int, date_lo: int, date_hi: int, table: str = "store_sales") -> s
     deterministic tie-break."""
     return f"""
         SELECT ss_store_sk, SUM(ss_net_profit) AS net_profit
-        FROM {table}
+        FROM store_sales
         WHERE ss_sold_date_sk >= {date_lo} AND ss_sold_date_sk <= {date_hi}
           AND ss_store_sk IS NOT NULL AND ss_net_profit IS NOT NULL
         GROUP BY ss_store_sk
@@ -132,11 +132,11 @@ def q1a_sql(k: int, date_lo: int, date_hi: int, table: str = "store_sales") -> s
     """
 
 
-def q1b_sql(k: int, date_lo: int, date_hi: int, table: str = "store_sales") -> str:
+def q1b_sql(k: int, date_lo: int, date_hi: int) -> str:
     """SQL dual of q1b (HiveQL at Software Documentation.pdf p.2)."""
     return f"""
         SELECT ss_item_sk, SUM(ss_quantity) AS total_quantity
-        FROM {table}
+        FROM store_sales
         WHERE ss_sold_date_sk >= {date_lo} AND ss_sold_date_sk <= {date_hi}
           AND ss_item_sk IS NOT NULL
         GROUP BY ss_item_sk
@@ -145,11 +145,11 @@ def q1b_sql(k: int, date_lo: int, date_hi: int, table: str = "store_sales") -> s
     """
 
 
-def q1c_sql(k: int, date_lo: int, date_hi: int, table: str = "store_sales") -> str:
+def q1c_sql(k: int, date_lo: int, date_hi: int) -> str:
     """SQL dual of q1c (HiveQL at Software Documentation.pdf p.3)."""
     return f"""
         SELECT ss_sold_date_sk, SUM(ss_net_profit) AS net_profit
-        FROM {table}
+        FROM store_sales
         WHERE ss_sold_date_sk >= {date_lo} AND ss_sold_date_sk <= {date_hi}
           AND ss_sold_date_sk IS NOT NULL
         GROUP BY ss_sold_date_sk

@@ -95,8 +95,8 @@ DRIVER_WINDOW: tuple[str, ...] = (
     "dedup_family_profile",
     "dedup_cluster_quality",
     "dedup_embedding_lsh",
+    "dedup_clusters",
     "dedup_collapse",
-    "dedup_clusters_bigstar",
     "dedup_semantic_guardrail",
     "corpus_clean",
     "doc_token_rarity",

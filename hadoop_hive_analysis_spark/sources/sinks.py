@@ -21,12 +21,12 @@ def write_parquet(
     path: str,
     *,
     partition_by: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    """Engine-native sink. ``partition_by`` enables partition pruning for
-    downstream readers — the scale path for fact tables (e.g. partition by
-    date at 100 TB so date-range queries touch only matching directories)."""
-    writer = df.write.mode(mode)
+    """Engine-native sink (overwrites ``path``). ``partition_by`` enables
+    partition pruning for downstream readers — the scale path for fact
+    tables (e.g. partition by date at 100 TB so date-range queries touch
+    only matching directories)."""
+    writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)

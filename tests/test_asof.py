@@ -1,12 +1,11 @@
-"""Generic as-of operator: columnar (union+carry-forward) and pandas
-(merge_asof) implementations must agree with each other and with the
-oracle-checked events query."""
+"""Generic as-of operator (union+carry-forward) against the
+oracle-checked events query, plus the events-table operators."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from hadoop_hive_analysis_spark.operators.asof import asof_join, asof_join_pandas
+from hadoop_hive_analysis_spark.operators.asof import asof_join
 from hadoop_hive_analysis_spark.operators.events import events_asof_join
 from hadoop_hive_analysis_spark.sources.catalog import load_table
 
@@ -35,20 +34,6 @@ def test_generic_asof_matches_events_query(spark, sf_dir):
         for r in events_asof_join(spark, sf_dir).collect()
     )
     assert got == want
-
-
-def test_pandas_asof_matches_columnar(spark, sf_dir):
-    purchases, clicks = _sides(spark, sf_dir)
-    kw = dict(on="ts", by="user_id", right_cols=["event_id", "ts"])
-    col = sorted(
-        (r.event_id, r.user_id, r.event_id_right)
-        for r in asof_join(purchases, clicks, **kw).collect()
-    )
-    pdv = sorted(
-        (r.event_id, r.user_id, int(r.event_id_right))
-        for r in asof_join_pandas(purchases, clicks, **kw).collect()
-    )
-    assert col == pdv
 
 
 def test_robust_outliers_planted(spark, tmp_path):

@@ -1,6 +1,6 @@
-"""Connected-components algorithms versus an exact union-find ground
-truth, including the long-chain case where bounded min-label propagation
-cannot converge but large-star/small-star does."""
+"""Connected components (driver union-find and the large-star/small-star
+loop) versus an exact union-find ground truth, including a chain longer
+than MAX_ITERATIONS."""
 
 from __future__ import annotations
 
@@ -8,7 +8,6 @@ import random
 
 from hadoop_hive_analysis_spark.operators.components import (
     MAX_ITERATIONS,
-    connected_components,
     connected_components_bigstar,
 )
 
@@ -105,33 +104,27 @@ def test_bigstar_matches_union_find_random_graph(spark):
     assert _run_distributed(spark, edges) == truth
 
 
-def test_min_label_matches_union_find_on_small_diameter(spark):
-    # unions of small cliques — the near-dup-graph shape min-label targets
+def test_bigstar_matches_union_find_on_cliques(spark):
+    # unions of small cliques — the near-dup-graph shape
     edges = []
     for c in range(10):
         base = c * 10
         edges += [(base + i, base + j) for i in range(4) for j in range(i + 1, 4)]
     nodes = {n for e in edges for n in e}
     truth = _truth_min_label(nodes, edges)
-    assert _run(spark, connected_components, edges) == truth
     assert _run(spark, connected_components_bigstar, edges) == truth
     assert _run_distributed(spark, edges) == truth
 
 
-def test_bigstar_converges_on_chain_where_min_label_cannot(spark):
-    """A path graph longer than MAX_ITERATIONS: min-label propagation
-    moves the minimum one hop per iteration, so it must refuse (raise)
-    rather than emit wrong labels; the star alternation halves chains per
-    round and gets it right."""
-    import pytest
-
+def test_bigstar_converges_on_chain_longer_than_max_iterations(spark):
+    """A path graph longer than MAX_ITERATIONS: a loop that moved the
+    minimum one hop per round could not finish; the star alternation
+    halves chains per round and labels every node 0 on both paths."""
     n = 2 * MAX_ITERATIONS + 5
     edges = [(i, i + 1) for i in range(n - 1)]
     big = _run(spark, connected_components_bigstar, edges)
     assert big == {i: 0 for i in range(n)}
     assert _run_distributed(spark, edges) == big
-    with pytest.raises(RuntimeError, match="did not converge"):
-        _run(spark, connected_components, edges)
 
 
 def test_ensemble_collapse_joins_mixed_chain(spark, tmp_path):

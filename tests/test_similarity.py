@@ -537,11 +537,11 @@ def test_lloyd_distributed_matches_numpy(spark, sf_dir):
     init, same argmin tie-break, same floor-division means."""
     import numpy as np
 
-    from hadoop_hive_analysis_spark.operators.similarity import _quantized
-    from hadoop_hive_analysis_spark.operators.vectors import (
-        _lloyd_distributed,
+    from hadoop_hive_analysis_spark.operators.similarity import (
         _lloyd_np,
+        _quantized,
     )
+    from hadoop_hive_analysis_spark.operators.vectors import _lloyd_distributed
 
     sample_df = _quantized(spark, sf_dir).select("vec_id", "q")
     mat = np.array(
