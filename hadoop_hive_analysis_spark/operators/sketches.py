@@ -433,11 +433,12 @@ PRICE_QUANTILES_SQL = _quantiles_sql()
 
 # ------------------------------------------- Misra-Gries heavy hitters
 
-# Counters kept per partition summary. The candidate-superset guarantee
-# (Misra-Gries 1982; mergeable form Agarwal et al., PODS 2012) is: any
-# token whose PARTITION count exceeds n_i/(MG_K+1) survives that
-# partition's summary, so any token whose GLOBAL count exceeds
-# n/(MG_K+1) survives in at least one partition (pigeonhole). The
+# Counters kept per summary. The candidate-superset guarantee
+# (Misra-Gries 1982; mergeable form Agarwal et al., PODS 2012): a summary
+# of n items undercounts every token by at most n/(MG_K+1), and summing
+# summaries then compressing the sum back to MG_K counters keeps that
+# bound for the union — so every token whose GLOBAL count exceeds
+# n/(MG_K+1) keeps a positive counter in the driver-merged summary. The
 # report threshold 1/HH_PHI_DEN must therefore be >= 1/(MG_K+1).
 MG_K = 64
 HH_PHI_DEN = 50  # report tokens with share > 1/50 = 2% of the corpus
@@ -445,11 +446,13 @@ assert HH_PHI_DEN <= MG_K + 1, "MG candidate set would not cover threshold"
 
 
 def _mg_merge_batch(counts: dict, vc) -> dict:
-    """Merge one Arrow batch's exact value_counts into a running
-    Misra-Gries summary, then compress back to ``MG_K`` counters by
-    subtracting the (MG_K+1)-th largest count (the mergeable-summaries
-    compress step: decrement-all is the classic MG step applied in
-    bulk; error stays <= n_seen/(MG_K+1))."""
+    """Merge exact counts ``vc`` (a dict or a pandas ``value_counts``)
+    into a running Misra-Gries summary, then compress back to ``MG_K``
+    counters by subtracting the (MG_K+1)-th largest count (the
+    mergeable-summaries compress step: decrement-all is the classic MG
+    step applied in bulk; error stays <= n_seen/(MG_K+1)). Folds one
+    Arrow batch into a partition's summary, and on the driver the summed
+    partition summaries into one."""
     for tok, c in vc.items():
         counts[tok] = counts.get(tok, 0) + int(c)
     if len(counts) > MG_K:
@@ -462,6 +465,55 @@ def _mg_merge_batch(counts: dict, vc) -> dict:
     return counts
 
 
+def _mg_partition_summary():
+    """The phase-1 ``mapInPandas`` function of :func:`doc_heavy_hitters`:
+    one partition's Misra-Gries counters as ``(tok, c)`` rows, then one
+    ``(NULL, n_partition)`` row carrying the partition's token count.
+
+    The returned closure must be SELF-CONTAINED (executors can't import
+    this package when the driver runs from a foreign cwd — cloudpickle
+    pickles module functions by reference); its fold duplicates
+    :func:`_mg_merge_batch` and ``test_mg_closure_matches_module`` pins
+    the two identical."""
+    mg_k = MG_K
+
+    def mg_summary(batches):
+        import numpy as np
+        import pandas as pd
+
+        counts: dict = {}
+        n = 0
+        for pdf in batches:
+            n += len(pdf)
+            for tok, c in pdf["tok"].value_counts().items():
+                counts[tok] = counts.get(tok, 0) + int(c)
+            if len(counts) > mg_k:
+                kth = np.partition(
+                    np.fromiter(counts.values(), dtype="int64"), -(mg_k + 1)
+                )[-(mg_k + 1)]
+                counts = {t: c - kth for t, c in counts.items() if c > kth}
+        yield pd.DataFrame(
+            {"tok": [*counts, None], "c": [*counts.values(), n]}
+        )
+
+    return mg_summary
+
+
+def _mg_merge_summaries(rows) -> tuple[int, dict]:
+    """Driver side of phase 1: the corpus token count ``n`` (the sum of
+    the ``(NULL, n_partition)`` rows) and the partition summaries merged
+    into at most ``MG_K`` candidates by one :func:`_mg_merge_batch` over
+    their summed counters."""
+    n = 0
+    summed: dict = {}
+    for tok, c in rows:
+        if tok is None:
+            n += c
+        else:
+            summed[tok] = summed.get(tok, 0) + c
+    return n, _mg_merge_batch({}, summed)
+
+
 def doc_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT corpus heavy hitters (tokens with > 1/HH_PHI_DEN share) via
     a two-phase Misra-Gries candidate pass — the bounded-memory answer
@@ -471,57 +523,43 @@ def doc_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Phase 1 streams each partition once through an ``MG_K``-counter
     Misra-Gries summary (Arrow ``mapInPandas``; per batch an exact
     vectorized ``value_counts`` is folded into the summary and
-    compressed — no per-row Python). Each partition emits at most
-    ``MG_K`` candidate tokens, so the candidate set is tiny and
-    broadcast. Phase 2 recounts ONLY the candidates exactly (broadcast
-    semi-join, then one partial-aggregated shuffle bounded by
+    compressed — no per-row Python) and collects the summaries with the
+    partitions' token counts to the driver. There ``n`` is the sum of
+    the counts, and one multi-way merge (:func:`_mg_merge_summaries`;
+    Agarwal et al., PODS 2012) keeps at most ``MG_K`` candidates with
+    error still <= n/(MG_K+1), so they remain a superset of the true
+    heavy hitters. Phase 2 recounts ONLY the candidates exactly (an
+    ``IN`` filter below the partial count, then one shuffle bounded by
     |candidates|) and applies the exact integer threshold
-    ``cnt * HH_PHI_DEN > n``. Because the MG guarantee makes the
-    candidate set a superset of the true heavy hitters and phase 2 is
-    exact, the OUTPUT is exactly the true heavy-hitter set — fully
-    SQL-expressible, so the oracle is a plain GROUP BY ... HAVING.
+    ``cnt * HH_PHI_DEN > n``, ``n`` a BIGINT literal. Because phase 2 is
+    exact over a superset, the OUTPUT is exactly the true heavy-hitter
+    set — fully SQL-expressible, so the oracle is a plain
+    GROUP BY ... HAVING.
 
-    Scale shape: corpus tokenized twice (candidate pass + recount;
-    both map-side only until the |candidates|-bounded final agg —
-    at 100 TB that is two streaming scans and a kilobyte-scale
-    shuffle, vs. a full distinct-token shuffle for the naive plan).
-    ``share`` is one IEEE division of exact int64s — bit-identical
-    across engines.
+    Cost: 3 jobs (the phase-1 collect, then the recount's map and
+    result stages), no join, no broadcast and no materialized token
+    table — the corpus is tokenized in two streaming scans.
+
+    Scale shape: phase 1 sends at most ``MG_K``+1 rows per scan
+    partition to the driver (at 100 TB, ~800k partitions of 65 small
+    rows), where the old plan sent the distinct candidate set through a
+    shuffle and a broadcast; phase 2 is map-side until its
+    |candidates|-bounded final agg — two streaming scans and a
+    kilobyte-scale shuffle, vs. a full distinct-token shuffle for the
+    naive plan. ``share`` is one IEEE division of exact int64s —
+    bit-identical across engines.
     """
     from ..functions.text import tokens
 
     d = load_table(spark, sf_dir, "documents")
-    ex = materialize(d.select(F.explode(tokens("text")).alias("tok")))
-
-    # The closure must be SELF-CONTAINED (executors can't import this
-    # package when the driver runs from a foreign cwd — cloudpickle
-    # pickles module functions by reference); the logic is duplicated
-    # from _mg_merge_batch and pinned identical by
-    # test_mg_closure_matches_module.
-    mg_k = MG_K
-
-    def mg_candidates(batches):
-        import numpy as np
-        import pandas as pd
-
-        counts: dict = {}
-        for pdf in batches:
-            for tok, c in pdf["tok"].value_counts().items():
-                counts[tok] = counts.get(tok, 0) + int(c)
-            if len(counts) > mg_k:
-                kth = np.partition(
-                    np.fromiter(counts.values(), dtype="int64"), -(mg_k + 1)
-                )[-(mg_k + 1)]
-                counts = {t: c - kth for t, c in counts.items() if c > kth}
-        yield pd.DataFrame({"tok": list(counts.keys())})
-
-    cand = ex.mapInPandas(mg_candidates, "tok string").distinct()
-    totals = ex.agg(F.count("*").alias("n"))
+    ex = d.select(F.explode(tokens("text")).alias("tok"))
+    summaries = ex.mapInPandas(_mg_partition_summary(), "tok string, c long")
+    n, cands = _mg_merge_summaries(summaries.collect())
     return (
-        ex.join(F.broadcast(cand), "tok")
+        ex.filter(F.col("tok").isin(sorted(cands)))
         .groupBy("tok")
         .agg(F.count("*").alias("cnt"))
-        .crossJoin(F.broadcast(totals))
+        .withColumn("n", F.lit(n).cast("bigint"))
         .filter(F.col("cnt") * HH_PHI_DEN > F.col("n"))
         .select(
             "tok",

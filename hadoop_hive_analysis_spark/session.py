@@ -36,9 +36,10 @@ class ReleaseResult(NamedTuple):
 # JVM; serialized levels them) and an r15 sf1 mini-pack A/B (6 dedup
 # queries × 3 reps, one JVM, interleaved vs the prior tree: serialized
 # 131 s total vs deserialized 158 s, worst first-rep outlier halved).
-# Serialized blocks are flat buffers, several times smaller
-# (doc_heavy_hitters' token explode at sf0.1: 22.74 MB deserialized,
-# 1.59 MB serialized); MEMORY_AND_DISK spills only under pressure.
+# Serialized blocks are flat buffers, several times smaller (the token
+# explode doc_heavy_hitters checkpointed until it merged its candidates
+# on the driver, sf0.1: 22.74 MB deserialized, 1.59 MB serialized);
+# MEMORY_AND_DISK spills only under pressure.
 #
 # NB (advisor r19 adjudication): unlike Scala's MEMORY_AND_DISK,
 # *PySpark's* ``StorageLevel.MEMORY_AND_DISK`` is ``StorageLevel(True,
@@ -88,16 +89,24 @@ SCALE_CONF: dict[str, str] = {
     # (UnsafeHashedRelation) allocates one whole Tungsten page however
     # few its rows. Unset, the page is derived from driver heap ÷ cores:
     # 1 MiB at local[32]/1g, 2 MiB at local[8]/1g, 4 MiB at local[4]/1g,
-    # 16 MiB at local[4]/2g, 64 MiB at local[4]/8g — so doc_heavy_hitters'
-    # 30-row candidate broadcast reported 16.0 MiB under perfbench's 2g
-    # driver. Pinned at 4 MiB: candidates 16.0 → 4.0 MiB, the
-    # dedup_minhash_lsh band table 16.5 → 4.5 MiB, perfbench dedup_corpus
-    # peak_jvm_mb median 125.1 → 102.0 MB (lower in 10/10 alternating
-    # fresh-JVM pairs, 4-vCPU VM). A task's page table holds 8,192 pages,
-    # so the per-task ceiling stays 32 GiB; 1m and 2m saved only ~5 MB
-    # more (one run each).
+    # 16 MiB at local[4]/2g, 64 MiB at local[4]/8g — so the 30-row
+    # candidate broadcast doc_heavy_hitters then made reported 16.0 MiB
+    # under perfbench's 2g driver. Pinned at 4 MiB: candidates 16.0 →
+    # 4.0 MiB, the dedup_minhash_lsh band table 16.5 → 4.5 MiB, perfbench
+    # dedup_corpus peak_jvm_mb median 125.1 → 102.0 MB (lower in 10/10
+    # alternating fresh-JVM pairs, 4-vCPU VM). A task's page table holds
+    # 8,192 pages, so the per-task ceiling stays 32 GiB; 1m and 2m saved
+    # only ~5 MB more (one run each).
     # Single-long-key broadcasts (LongHashedRelation) do not use the page.
     "spark.buffer.pageSize": "4m",
+    # Off: at its default PySpark wraps every functions/Column call in
+    # an active-session lookup, a conf read and a JVM PySparkCurrentOrigin
+    # set/clear, to put the Python call site into DataFrame error
+    # contexts. Building q1a over pipe text went from 234 to 94 py4j
+    # commands, dedup_minhash_lsh from 665 to 285 (PySpark 4.1); the call
+    # site lost points into this package's operator code. PySpark caches
+    # its first read of the flag per process.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 
@@ -179,7 +188,12 @@ def release_cached_blocks(spark: SparkSession) -> ReleaseResult:
     # the final word. (Checkpoint blocks are NOT in the CacheManager.)
     spark.catalog.clearCache()
     jsc = spark.sparkContext._jsc
-    jrdds = list(jsc.getPersistentRDDs().values())
+    # Keys copied out as one Java array: a Python loop over the py4j map
+    # ends on the Java iterator's NoSuchElementException, which PySpark's
+    # exception conversion answers with more round trips (a release of
+    # one RDD sent 85 py4j commands, ~0.1 s, instead of 12).
+    rdds = jsc.getPersistentRDDs()
+    jrdds = [rdds.get(k) for k in rdds.keySet().toArray()]
     for jrdd in jrdds:
         jrdd.unpersist(True)
     return ReleaseResult(len(jrdds), len(jsc.getPersistentRDDs()))

@@ -1,7 +1,9 @@
 from __future__ import annotations
 
+import gc
 import os
 import sys
+import threading
 
 import pytest
 
@@ -25,3 +27,37 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def py4j_commands(monkeypatch):
+    """``count(fn)``: the py4j commands sent from this thread while
+    ``fn()`` runs.
+
+    Only commands sent from this thread count, and cyclic GC is off while
+    counting: py4j sends the detach messages of collected Java objects
+    from its finalizer thread, at times that depend on earlier tests.
+    """
+    from py4j.clientserver import ClientServerConnection
+
+    me = threading.get_ident()
+    sent = [0]
+    send = ClientServerConnection.send_command
+
+    def counting(self, *args, **kwargs):
+        sent[0] += threading.get_ident() == me
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+
+    def count(fn) -> int:
+        sent[0] = 0
+        gc.collect()
+        gc.disable()
+        try:
+            fn()
+        finally:
+            gc.enable()
+        return sent[0]
+
+    return count

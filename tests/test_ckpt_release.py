@@ -118,6 +118,20 @@ def test_materialize_schedules_no_job_and_release_frees_it(spark):
     assert _n_block_entries(spark) == 0
 
 
+def test_release_of_one_checkpoint_stays_under_30_py4j_commands(spark, py4j_commands):
+    """Releasing one checkpointed frame sends at most 30 py4j commands
+    (11-12 measured). Walking the persisted-RDD map as a Python loop sent
+    85: py4j ends the loop on the Java iterator's
+    NoSuchElementException, and PySpark's exception conversion answers
+    it with a round trip per exception class it checks."""
+    release_cached_blocks(spark)
+    materialize(spark.range(1_000)).count()
+    results = []
+    sent = py4j_commands(lambda: results.append(release_cached_blocks(spark)))
+    assert results == [(1, 0)]
+    assert 0 < sent <= 30, sent
+
+
 def test_materialize_runs_an_exchange_map_stage_at_the_call(spark):
     """Non-eager is not job-free under AQE: building the checkpoint RDD
     of a frame over a shuffle exchange runs that exchange's map stage at

@@ -1,5 +1,6 @@
 """Text spellings of the portable hashes against their Column and DuckDB
-twins, and the driver-side cost of building the MinHash-LSH operator.
+twins, and the driver-side cost of building the MinHash-LSH operator and
+the reference's q1a.
 
 The dedup family builds its per-row hash projections as Spark SQL text
 (``h64_spark_sql``/``h31_spark_sql``/``minhash_sql``); the Column
@@ -10,10 +11,8 @@ oracle hashes and the streaming-vs-batch signature agreement break.
 
 from __future__ import annotations
 
-import gc
 import hashlib
 import random
-import threading
 
 import duckdb
 from pyspark.sql import functions as F
@@ -90,34 +89,54 @@ def test_minhash_text_column_and_duckdb_agree(spark):
     assert sorted(map(tuple, text)) == sorted(map(tuple, col)) == sorted(duck) == want
 
 
-def test_minhash_lsh_build_stays_under_1000_py4j_commands(spark, sf_dir, monkeypatch):
+def test_minhash_lsh_build_stays_under_400_py4j_commands(spark, sf_dir, py4j_commands):
     """Building (not running) ``dedup_minhash_lsh`` on sf0.001 sends at most
-    1,000 py4j commands from the building thread.
+    400 py4j commands from the building thread.
 
     Measured with PySpark 4.1.2: 2,796 commands when the 16 signature
     folds and 4 band keys were a Column-DSL tree, 665 with them as
-    Spark-SQL ``selectExpr`` text. Only commands sent from this thread count,
-    and cyclic GC is off while counting: py4j sends the detach messages
-    of collected Java objects from its finalizer thread, at times that
-    depend on earlier tests.
+    Spark-SQL ``selectExpr`` text, 285 once the session also turned off
+    DataFrame call-site capture (``spark.python.sql.dataFrameDebugging``).
     """
-    from py4j.clientserver import ClientServerConnection
-
     from hadoop_hive_analysis_spark.operators.dedup import dedup_minhash_lsh
 
-    me = threading.get_ident()
-    sent = [0]
-    send = ClientServerConnection.send_command
+    sent = py4j_commands(lambda: dedup_minhash_lsh(spark, sf_dir))
+    assert 0 < sent <= 400, sent
 
-    def counting(self, *args, **kwargs):
-        sent[0] += threading.get_ident() == me
-        return send(self, *args, **kwargs)
 
-    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
-    gc.collect()
-    gc.disable()
-    try:
-        dedup_minhash_lsh(spark, sf_dir)
-    finally:
-        gc.enable()
-    assert 0 < sent[0] <= 1000, sent[0]
+def test_session_skips_call_site_capture_and_q1a_build_stays_under_120_py4j_commands(
+    spark, tmp_path, py4j_commands
+):
+    """A ``get_spark`` session turns DataFrame call-site capture off, so
+    building the reference's q1a over pipe text (the read and the query
+    frame) sends at most 120 py4j commands: 234 with capture on, 94 off
+    (PySpark 4.1.2). With capture on, every ``functions``/``Column`` call
+    also looks up the active session, reads a conf and sets and clears a
+    JVM ``PySparkCurrentOrigin``.
+
+    ``pyspark.errors.utils.is_debugging_enabled`` caches its first read per
+    process, so the setting that counts is the one of the session active
+    at the first such call — in this suite, the ``get_spark`` fixture's.
+    """
+    from pyspark.errors.utils import is_debugging_enabled
+
+    from hadoop_hive_analysis_spark.plans.reference_queries import (
+        q1a_top_stores_by_profit,
+    )
+    from hadoop_hive_analysis_spark.sources.csv import read_store_sales
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not is_debugging_enabled()
+    fields = [""] * 23
+    fields[0], fields[2], fields[7], fields[10], fields[22] = (
+        "2451000", "1", "1", "2", "10.50"
+    )
+    path = tmp_path / "store_sales.dat"
+    path.write_text("|".join(fields) + "\n")
+
+    def build():
+        sales = read_store_sales(spark, str(path))
+        q1a_top_stores_by_profit(sales, 10, 2450000, 2452000)
+
+    sent = py4j_commands(build)
+    assert 0 < sent <= 120, sent

@@ -342,12 +342,22 @@ def test_priority_sample_takeordered_no_global_sort(plans):
     assert "TakeOrderedAndProject" in p
 
 
-def test_heavy_hitters_broadcast_candidates(plans):
-    """Phase-2 recount joins the corpus against BROADCAST candidates —
-    the shuffle after it is bounded by |candidates|, not vocabulary."""
+def test_heavy_hitters_recount_filters_candidates_before_partial_count(plans):
+    """Phase-2 recount keeps only the driver-merged candidates with an
+    IN/InSet filter below the partial count — the shuffle after it is
+    bounded by |candidates|, not vocabulary — and needs no join, no
+    single-partition total and no materialized token table."""
     p = plans("doc_heavy_hitters")
-    assert "BroadcastHashJoin" in p
-    assert "SortMergeJoin" not in p
+    lines = p.splitlines()
+    partial = next(i for i, l in enumerate(lines) if "partial_count" in l)
+    assert any(
+        "Filter tok#" in l and (" INSET " in l or " IN (" in l)
+        for l in lines[partial + 1 :]
+    ), p
+    nodes = [l.lstrip(" :+-").split(" ")[0] for l in lines]
+    assert not [n for n in nodes if "Join" in n or n == "CartesianProduct"], p
+    assert "SinglePartition" not in p
+    assert "Scan ExistingRDD" not in p
 
 
 def test_source_drift_single_tokenize(plans):

@@ -1,5 +1,6 @@
 """scripts/scale.py: the grown sf_dir, the per-point oracle check, the
-streaming state-row count, and the engine free of measurement hooks."""
+streaming state-row count, the untimed warm-up, and the engine free of
+measurement hooks."""
 
 from __future__ import annotations
 
@@ -37,6 +38,32 @@ def test_stream_join_replay_reports_state_rows(spark, sf_dir):
     (p,) = scale_points(spark, ["events_stream_join_replay"], [1], sf_dir)
     assert p["oracle_ok"]
     assert p["state_rows"] > 0
+
+
+def test_every_entry_warms_up_once_before_the_first_timed_point(spark, sf_dir, monkeypatch):
+    from hadoop_hive_analysis_spark.plans.registry import QUERIES, QuerySpec
+
+    calls = []
+
+    def entry(name):
+        def fn(spark, d):
+            calls.append(name)
+            return spark.range(3)
+
+        return fn
+
+    for name in ("warm_a", "warm_b"):
+        monkeypatch.setitem(QUERIES, name, QuerySpec(entry(name), None, ""))
+    points = list(scale_points(spark, ["warm_a", "warm_b"], [1, 2], sf_dir))
+    # one untimed run each, then two timed runs per point
+    timed = ["warm_a"] * 2 + ["warm_b"] * 2
+    assert calls == ["warm_a", "warm_b"] + timed + timed
+    assert [(p["query"], p["mult"], p["rows"]) for p in points] == [
+        ("warm_a", 1, 3),
+        ("warm_b", 1, 3),
+        ("warm_a", 2, 3),
+        ("warm_b", 2, 3),
+    ]
 
 
 def test_streaming_module_has_no_progress_hook():

@@ -3,6 +3,7 @@ equivalence against the plain groupBy it replaces."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from hadoop_hive_analysis_spark.operators.sketches import (
@@ -10,6 +11,7 @@ from hadoop_hive_analysis_spark.operators.sketches import (
     eda_sketch_profile,
 )
 from hadoop_hive_analysis_spark.operators.skew import events_value_by_user_salted
+from hadoop_hive_analysis_spark.session import release_cached_blocks
 from hadoop_hive_analysis_spark.sources.catalog import load_table
 
 
@@ -121,13 +123,20 @@ def test_share_of_key_total_plan_avoids_window(spark, sf_dir):
     assert sums and all(abs(r.s - 1.0) < 1e-9 for r in sums)
 
 
-def test_heavy_hitters_equals_exact_on_planted_skew(spark):
+@pytest.mark.parametrize("parts", [1, 8, 64])
+def test_heavy_hitters_equals_exact_on_planted_skew(spark, parts):
     """On a synthetic corpus with planted hot tokens and a long uniform
     tail, the two-phase MG output must equal the exact heavy-hitter set
     — this exercises the candidate-superset guarantee, since a dropped
-    candidate would silently shrink the result."""
+    candidate would silently shrink the result. The corpus is scanned in
+    ``parts`` partitions, so the driver merges 1 to 64 summaries; the
+    operator runs exactly 3 jobs and leaves no persisted RDD."""
+    import os
+    import tempfile
+
     import pandas as pd
 
+    from hadoop_hive_analysis_spark.functions.text import tokens
     from hadoop_hive_analysis_spark.operators.sketches import (
         HH_PHI_DEN,
         doc_heavy_hitters,
@@ -139,21 +148,31 @@ def test_heavy_hitters_equals_exact_on_planted_skew(spark):
         toks = ["hot%d" % (i % 3)] * 5 + ["cold%d" % ((i * 10 + j) % 2000) for j in range(10)]
         docs.append((i, " ".join(toks)))
     pdf = pd.DataFrame(docs, columns=["doc_id", "text"])
-    import tempfile, os
-
+    sc = spark.sparkContext
+    group = f"test_sketches_skew.heavy_hitters.{parts}"
+    max_bytes = spark.conf.get("spark.sql.files.maxPartitionBytes")
     with tempfile.TemporaryDirectory() as tmp:
-        spark.createDataFrame(pdf).repartition(8).write.parquet(
-            os.path.join(tmp, "documents.parquet")
+        path = os.path.join(tmp, "documents.parquet")
+        spark.createDataFrame(pdf).repartition(parts).write.parquet(path)
+        release_cached_blocks(spark)
+        # one scan partition per file: small files are packed into a
+        # partition up to maxPartitionBytes, each costing openCostInBytes
+        spark.conf.set(
+            "spark.sql.files.maxPartitionBytes",
+            spark.conf.get("spark.sql.files.openCostInBytes"),
         )
-        got = {
-            (r.tok, r.cnt) for r in doc_heavy_hitters(spark, tmp).collect()
-        }
-        from pyspark.sql import functions as F
-        from hadoop_hive_analysis_spark.functions.text import tokens
-
-        ex = spark.read.parquet(os.path.join(tmp, "documents.parquet")).select(
-            F.explode(tokens("text")).alias("tok")
-        )
+        try:
+            assert spark.read.parquet(path).rdd.getNumPartitions() == parts
+            sc.setJobGroup(group, "doc_heavy_hitters", False)
+            got = {
+                (r.tok, r.cnt) for r in doc_heavy_hitters(spark, tmp).collect()
+            }
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+        finally:
+            sc._jsc.clearJobGroup()
+            spark.conf.set("spark.sql.files.maxPartitionBytes", max_bytes)
+        assert sc._jsc.getPersistentRDDs().isEmpty()
+        ex = spark.read.parquet(path).select(F.explode(tokens("text")).alias("tok"))
         n = ex.count()
         exact = {
             (r.tok, r.cnt)
@@ -164,6 +183,7 @@ def test_heavy_hitters_equals_exact_on_planted_skew(spark):
         }
     assert got == exact
     assert {t for t, _ in got} == {"hot0", "hot1", "hot2"}
+    assert len(jobs) == 3, jobs
 
 
 def test_mg_summary_bounded_and_superset():
@@ -195,49 +215,77 @@ def test_mg_summary_bounded_and_superset():
     assert counts["hh_b"] >= 3000 - n // (MG_K + 1)
 
 
-def test_mg_closure_matches_module(spark):
-    """The self-contained mapInPandas closure and the module-level
-    _mg_merge_batch must produce the same candidate summary over the
-    same batch sequence (drift guard for the duplicated logic)."""
+def test_driver_merge_of_64_partition_summaries():
+    """64 partition summaries whose union holds more than MG_K tokens
+    (each partition has its own local hot token) merge on the driver
+    into <= MG_K counters that keep every token above n/(MG_K+1), each
+    undercounted by at most n/(MG_K+1), and the exact total n."""
+    from collections import Counter
+
     import numpy as np
     import pandas as pd
 
     from hadoop_hive_analysis_spark.operators.sketches import (
         MG_K,
+        _mg_merge_summaries,
+        _mg_partition_summary,
+    )
+
+    rng = np.random.default_rng(5)
+    spread = [f"g{j}" for j in range(5)]
+    summarize = _mg_partition_summary()
+    rows: list = []
+    true: Counter = Counter()
+    for i in range(64):
+        toks = (
+            [f"local{i}"] * 200
+            + [g for g in spread for _ in range(30)]
+            + [f"tail{t}" for t in rng.integers(0, 50_000, size=650)]
+        )
+        rng.shuffle(toks)
+        true.update(toks)
+        batches = [pd.DataFrame({"tok": toks[lo : lo + 256]}) for lo in range(0, 1000, 256)]
+        (summary,) = summarize(iter(batches))
+        rows += list(summary.itertuples(index=False, name=None))
+    assert len({t for t, _ in rows if t is not None}) > MG_K
+    n, cands = _mg_merge_summaries(rows)
+    assert n == sum(true.values()) == 64_000
+    assert len(cands) <= MG_K
+    heavy = {t for t, c in true.items() if c * (MG_K + 1) > n}
+    assert heavy == set(spread)
+    for t in heavy:
+        assert true[t] - n // (MG_K + 1) <= cands[t] <= true[t]
+
+
+def test_mg_closure_matches_module():
+    """The self-contained mapInPandas closure and the module-level
+    _mg_merge_batch must produce the same candidate summary over the
+    same batch sequence (drift guard for the duplicated logic); the
+    closure's last row is (NULL, the partition's token count)."""
+    import numpy as np
+    import pandas as pd
+
+    from hadoop_hive_analysis_spark.operators.sketches import (
         _mg_merge_batch,
-        doc_heavy_hitters,
+        _mg_partition_summary,
     )
 
     rng = np.random.default_rng(11)
     toks = ["hh_x"] * 4000 + [f"t{i}" for i in rng.integers(0, 3000, size=16000)]
     rng.shuffle(toks)
+    batches = [pd.DataFrame({"tok": toks[lo : lo + 2048]}) for lo in range(0, len(toks), 2048)]
     counts: dict = {}
-    for lo in range(0, len(toks), 2048):
-        counts = _mg_merge_batch(
-            counts, pd.Series(toks[lo : lo + 2048]).value_counts()
-        )
-    # drive the actual operator's closure on one partition of the same
-    # stream via a throwaway documents table
-    import os, tempfile
-
-    with tempfile.TemporaryDirectory() as tmp:
-        pdf = pd.DataFrame(
-            {
-                "doc_id": range(len(toks) // 16),
-                "text": [
-                    " ".join(toks[i * 16 : (i + 1) * 16])
-                    for i in range(len(toks) // 16)
-                ],
-            }
-        )
-        spark.createDataFrame(pdf).coalesce(1).write.parquet(
-            os.path.join(tmp, "documents.parquet")
-        )
-        got = doc_heavy_hitters(spark, tmp).collect()
-    # exact recount makes outputs identical regardless of batch split;
-    # the planted hitter must survive both paths
+    for b in batches:
+        counts = _mg_merge_batch(counts, b["tok"].value_counts())
+    (out,) = _mg_partition_summary()(iter(batches))
+    assert list(out.columns) == ["tok", "c"]
+    *body, last = out.itertuples(index=False, name=None)
+    assert last == (None, len(toks))
+    assert dict(body) == counts
     assert "hh_x" in counts
-    assert "hh_x" in {r.tok for r in got}
+    # an empty partition still reports its (zero) token count
+    (empty,) = _mg_partition_summary()(iter([]))
+    assert list(empty.itertuples(index=False, name=None)) == [(None, 0)]
 
 
 def test_key_skew_profile_planted_hot_key(spark, tmp_path):
