@@ -5,7 +5,8 @@ path). Each primitive documents its DuckDB-SQL twin so the text-analysis
 and dedup operators stay oracle-checkable.
 
 Portability notes (chosen so both engines compute identical values):
-* tokenization = regex split on ``\\s+`` (DuckDB ``string_split_regex``);
+* tokenization = regex split on ``\\s+`` (Java); the DuckDB twin splits on
+  ``WS_RE2``, because RE2's ``\\s`` lacks the vertical tab that Java's has;
 * occurrence counts use the length-difference-after-replace trick —
   ``replace`` has identical semantics everywhere, unlike regex flavors;
 * ratios divide exact integers in IEEE double → bit-identical results.
@@ -16,11 +17,12 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-WS = r"\s+"
+WS = r"\s+"  # Java: [ \t\n\x0B\f\r]+
+WS_RE2 = r"[\s\v]+"  # the same set in RE2 (DuckDB), whose \s omits \x0B
 
 
 def tokens(col: Column | str) -> Column:
-    """Whitespace tokens. DuckDB twin: ``string_split_regex(x, '\\s+')``."""
+    """Whitespace tokens. DuckDB twin: ``string_split_regex(x, WS_RE2)``."""
     c = F.col(col) if isinstance(col, str) else col
     return F.split(c, WS)
 

@@ -33,7 +33,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.frames import local_frame
-from ..functions.text import tokens
+from ..functions.text import WS_RE2, tokens
 from ..session import materialize
 from ..sources.catalog import load_table
 
@@ -341,11 +341,11 @@ def bpe_quality_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tokenization + non-empty-word contract as _word_counts) and asserts
 # the non-SQL-expressible quality booleans TRUE — the
 # EMBEDDING_KMEANS_QUALITY_SQL contract applied to the tokenizer.
-BPE_QUALITY_FLOOR_SQL = r"""
+BPE_QUALITY_FLOOR_SQL = rf"""
     WITH w AS (
         SELECT word, count(*) AS cnt
         FROM (
-            SELECT unnest(string_split_regex(text, '\s+')) AS word
+            SELECT unnest(string_split_regex(text, '{WS_RE2}')) AS word
             FROM documents
         )
         WHERE length(word) > 0

@@ -38,7 +38,7 @@ from ..functions.hashing import (
     minhash_params,
     minhash_sql,
 )
-from ..functions.text import with_shingles
+from ..functions.text import WS_RE2, with_shingles
 from ..session import materialize
 from ..sources.catalog import load_table
 
@@ -58,9 +58,9 @@ SIMHASH_RADIUS = 3
 # behavior a training-data pipeline wants anyway.
 STOP_SHINGLE_DF = 32
 
-_SHINGLE_SQL = r"""
+_SHINGLE_SQL = rf"""
     WITH toks AS (
-        SELECT doc_id, string_split_regex(text, '\s+') AS t FROM documents
+        SELECT doc_id, string_split_regex(text, '{WS_RE2}') AS t FROM documents
     ),
     sh AS (
         SELECT doc_id,
@@ -667,7 +667,7 @@ def duplicated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DUPLICATED_SPANS_SQL = rf"""
     WITH toks AS (
-        SELECT doc_id, string_split_regex(text, '\s+') AS t FROM documents
+        SELECT doc_id, string_split_regex(text, '{WS_RE2}') AS t FROM documents
     ),
     sp AS (
         SELECT doc_id,
@@ -754,7 +754,7 @@ PACKED_ARGMIN_SQL = (
 
 DUPLICATED_SPANS_TOPK_SQL = rf"""
     WITH toks AS (
-        SELECT doc_id, string_split_regex(text, '\s+') AS t FROM documents
+        SELECT doc_id, string_split_regex(text, '{WS_RE2}') AS t FROM documents
     ),
     sp AS (
         SELECT doc_id, s,
@@ -920,7 +920,7 @@ def _scrub_against_starts(d: DataFrame, starts: DataFrame) -> DataFrame:
 
 SPAN_SCRUB_SQL = rf"""
     WITH toks AS (
-        SELECT doc_id, string_split_regex(text, '\s+') AS t FROM documents
+        SELECT doc_id, string_split_regex(text, '{WS_RE2}') AS t FROM documents
     ),
     spd AS (
         SELECT doc_id, s,
@@ -1011,7 +1011,7 @@ def _decontaminate_sql() -> str:
 
     return rf"""
     WITH toks AS (
-        SELECT doc_id, string_split_regex(text, '\s+') AS t FROM documents
+        SELECT doc_id, string_split_regex(text, '{WS_RE2}') AS t FROM documents
     ),
     spd AS (
         SELECT doc_id, s,
@@ -1144,8 +1144,8 @@ def dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DEDUP_EXACT_NORMALIZED_SQL = r"""
-    SELECT md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g')))
+DEDUP_EXACT_NORMALIZED_SQL = rf"""
+    SELECT md5(trim(regexp_replace(lower(text), '{WS_RE2}', ' ', 'g')))
                AS fingerprint,
            min(doc_id) AS canonical_id,
            count(*) AS n_copies,

@@ -50,7 +50,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.frames import local_frame
-from ..functions.text import tokens
+from ..functions.text import WS_RE2, tokens
 from ..sources.catalog import load_table
 
 # Probe query set: fixed module constants so the Spark plan and the
@@ -155,7 +155,7 @@ def _bm25_sql() -> str:
     qvals = ", ".join(f"({qid}, '{t}')" for qid, t in _query_terms())
     return rf"""
     WITH ex AS (
-        SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS tok
+        SELECT doc_id, unnest(string_split_regex(text, '{WS_RE2}')) AS tok
         FROM documents
     ),
     dl AS (SELECT doc_id, count(*) AS dl FROM ex GROUP BY doc_id),

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import WS_RE2, tokens
 from ..session import materialize
 from ..sources.catalog import load_table
 
@@ -549,8 +550,6 @@ def doc_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     naive plan. ``share`` is one IEEE division of exact int64s —
     bit-identical across engines.
     """
-    from ..functions.text import tokens
-
     d = load_table(spark, sf_dir, "documents")
     ex = d.select(F.explode(tokens("text")).alias("tok"))
     summaries = ex.mapInPandas(_mg_partition_summary(), "tok string, c long")
@@ -574,7 +573,7 @@ def doc_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DOC_HEAVY_HITTERS_SQL = rf"""
     WITH ex AS (
-        SELECT unnest(string_split_regex(text, '\s+')) AS tok FROM documents
+        SELECT unnest(string_split_regex(text, '{WS_RE2}')) AS tok FROM documents
     ),
     tot AS (SELECT count(*) AS n FROM ex),
     c AS (SELECT tok, count(*) AS cnt FROM ex GROUP BY tok)

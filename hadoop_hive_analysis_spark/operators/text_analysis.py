@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from ..functions.hashing import h31, h31_sql, h64, h64_sql
 from ..functions.text import (
     LANG_MARKERS,
+    WS_RE2,
     marker_score,
     marker_score_sql,
     shingles,
@@ -55,16 +56,16 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TEXT_TOKEN_STATS_SQL = r"""
+TEXT_TOKEN_STATS_SQL = rf"""
     SELECT doc_id,
            CAST(length(text) AS BIGINT) AS n_chars_m,
-           CAST(len(string_split_regex(text, '\s+')) AS BIGINT) AS n_tokens,
-           CAST(len(list_distinct(string_split_regex(text, '\s+'))) AS BIGINT)
+           CAST(len(string_split_regex(text, '{WS_RE2}')) AS BIGINT) AS n_tokens,
+           CAST(len(list_distinct(string_split_regex(text, '{WS_RE2}'))) AS BIGINT)
                AS n_distinct,
            CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]'))
                AS BIGINT) AS n_bpe_ish,
            length(replace(text, ' ', ''))
-               / len(string_split_regex(text, '\s+')) AS mean_tok_len
+               / len(string_split_regex(text, '{WS_RE2}')) AS mean_tok_len
     FROM documents
 """
 
@@ -87,9 +88,9 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TEXT_QUALITY_SQL = r"""
+TEXT_QUALITY_SQL = rf"""
     WITH t AS (
-        SELECT doc_id, text, string_split_regex(text, '\s+') AS toks
+        SELECT doc_id, text, string_split_regex(text, '{WS_RE2}') AS toks
         FROM documents
     )
     SELECT doc_id,
@@ -193,7 +194,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DOC_FINGERPRINT_SQL = rf"""
     WITH toks AS (
-        SELECT doc_id, string_split_regex(text, '\s+') AS t FROM documents
+        SELECT doc_id, string_split_regex(text, '{WS_RE2}') AS t FROM documents
     ),
     sh AS (
         SELECT doc_id,
@@ -285,7 +286,7 @@ def doc_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DOC_REPETITION_SQL = rf"""
     WITH toks AS (
-        SELECT doc_id, string_split_regex(text, '\s+') AS t FROM documents
+        SELECT doc_id, string_split_regex(text, '{WS_RE2}') AS t FROM documents
     ),
     g AS (
         SELECT doc_id, t,
@@ -362,7 +363,7 @@ def doc_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DOC_TFIDF_SQL = rf"""
     WITH toks AS (
-        SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS term
+        SELECT doc_id, unnest(string_split_regex(text, '{WS_RE2}')) AS term
         FROM documents
     ),
     tf AS (
@@ -442,7 +443,7 @@ def doc_token_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DOC_TOKEN_RARITY_SQL = rf"""
     WITH ex AS (
-        SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS tok
+        SELECT doc_id, unnest(string_split_regex(text, '{WS_RE2}')) AS tok
         FROM documents
     ),
     counts AS (SELECT tok, count(*) AS c FROM ex GROUP BY 1)
@@ -702,9 +703,9 @@ def source_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SOURCE_TOKEN_DRIFT_SQL = r"""
+SOURCE_TOKEN_DRIFT_SQL = rf"""
     WITH ex AS (
-        SELECT source, unnest(string_split_regex(text, '\s+')) AS tok
+        SELECT source, unnest(string_split_regex(text, '{WS_RE2}')) AS tok
         FROM documents
     ),
     st AS (SELECT source, tok, count(*) AS c_st FROM ex GROUP BY 1, 2),
@@ -806,7 +807,7 @@ DOC_BIGRAM_LM_SQL = rf"""
     WITH ex AS (
         SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
         FROM (
-            SELECT doc_id, string_split_regex(text, '\s+') AS t
+            SELECT doc_id, string_split_regex(text, '{WS_RE2}') AS t
             FROM documents
         ), unnest(range(1, len(t))) AS r(i)
         WHERE len(t) >= 2
@@ -882,7 +883,7 @@ VOCAB_COVERAGE_SQL = rf"""
     WITH counts AS (
         SELECT tok, count(*) AS c
         FROM (
-            SELECT unnest(string_split_regex(text, '\s+')) AS tok
+            SELECT unnest(string_split_regex(text, '{WS_RE2}')) AS tok
             FROM documents
         )
         GROUP BY tok
@@ -1050,8 +1051,8 @@ def _tokenize_vocab_sql() -> str:
     ),
     ex AS (
         SELECT doc_id,
-               unnest(string_split_regex(text, '\s+')) AS tok,
-               generate_subscripts(string_split_regex(text, '\s+'), 1) - 1
+               unnest(string_split_regex(text, '{WS_RE2}')) AS tok,
+               generate_subscripts(string_split_regex(text, '{WS_RE2}'), 1) - 1
                    AS pos
         FROM documents
     ),
@@ -1153,7 +1154,7 @@ CORPUS_COLLOCATIONS_SQL = rf"""
     WITH ex AS (
         SELECT t[i] AS w1, t[i + 1] AS w2
         FROM (
-            SELECT string_split_regex(text, '\s+') AS t FROM documents
+            SELECT string_split_regex(text, '{WS_RE2}') AS t FROM documents
         ), unnest(range(1, len(t))) AS r(i)
         WHERE len(t) >= 2
     ),
@@ -1248,7 +1249,7 @@ def doc_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 DOC_QUALITY_CLASSIFIER_SQL = rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'),
+               list_filter(string_split_regex(text, '{WS_RE2}'),
                            t -> t <> '') AS ts
         FROM documents
     ),

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from ..functions.frames import local_frame
 from ..functions.hashing import h64, h64_sql
-from ..functions.text import tokens, with_shingles
+from ..functions.text import WS_RE2, tokens, with_shingles
 from ..sources.catalog import load_table
 
 # ---------------------------------------------------------------- chunking
@@ -63,7 +63,7 @@ def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DOC_CHUNKS_SQL = rf"""
     WITH toks AS (
-        SELECT doc_id, string_split_regex(text, '\s+') AS t FROM documents
+        SELECT doc_id, string_split_regex(text, '{WS_RE2}') AS t FROM documents
     ),
     starts AS (
         SELECT doc_id, t,
@@ -154,7 +154,7 @@ def contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 CONTAMINATION_SQL = rf"""
     WITH toks AS (
-        SELECT doc_id, string_split_regex(text, '\s+') AS t FROM documents
+        SELECT doc_id, string_split_regex(text, '{WS_RE2}') AS t FROM documents
     ),
     sh AS (
         SELECT doc_id,
@@ -470,7 +470,7 @@ def seq_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 SEQ_PACKING_SQL = rf"""
     WITH t AS (
         SELECT doc_id,
-               CAST(len(string_split_regex(text, '\s+')) AS BIGINT)
+               CAST(len(string_split_regex(text, '{WS_RE2}')) AS BIGINT)
                    AS n_tokens,
                CAST({h64_sql("CAST(doc_id AS VARCHAR)")} % {PACK_SHARDS}
                    AS BIGINT) AS shard
@@ -614,7 +614,7 @@ def _funnel_sql() -> str:
     return rf"""
         WITH d AS (
             SELECT doc_id, text, lang,
-                   string_split_regex(text, '\s+') AS t
+                   string_split_regex(text, '{WS_RE2}') AS t
             FROM documents
         ),
         g AS (
@@ -989,7 +989,7 @@ def _length_buckets_sql() -> str:
     top = BUCKET_CEILINGS[-1]
     return rf"""
     WITH t AS (
-        SELECT CAST(len(string_split_regex(text, '\s+')) AS BIGINT) AS n
+        SELECT CAST(len(string_split_regex(text, '{WS_RE2}')) AS BIGINT) AS n
         FROM documents
     ),
     b AS (

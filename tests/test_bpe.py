@@ -6,13 +6,15 @@ from __future__ import annotations
 
 import duckdb
 
+from hadoop_hive_analysis_spark.functions.text import WS_RE2
+
 
 def _fixture_word_counts(sf_dir: str) -> dict[str, int]:
     con = duckdb.connect()
     rows = con.execute(
         rf"""
         SELECT word, count(*) AS c FROM (
-            SELECT unnest(string_split_regex(text, '\s+')) AS word
+            SELECT unnest(string_split_regex(text, '{WS_RE2}')) AS word
             FROM read_parquet('{sf_dir}/documents.parquet')
         ) GROUP BY word
         """
@@ -120,7 +122,7 @@ def test_bpe_segment_stats_differential(spark, sf_dir):
     con = duckdb.connect()
     docs = con.execute(
         rf"""
-        SELECT doc_id, string_split_regex(text, '\s+') AS toks
+        SELECT doc_id, string_split_regex(text, '{WS_RE2}') AS toks
         FROM read_parquet('{sf_dir}/documents.parquet')
         """
     ).fetchall()

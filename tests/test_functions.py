@@ -14,6 +14,7 @@ from hadoop_hive_analysis_spark.functions.hashing import (
     minhash_params,
 )
 from hadoop_hive_analysis_spark.functions.text import (
+    WS_RE2,
     count_occurrences,
     tokens,
     with_shingles,
@@ -83,6 +84,20 @@ def test_short_docs_produce_no_shingles(spark):
 def test_tokens_split_on_any_whitespace(spark):
     df = spark.createDataFrame([("a  b\tc",)], ["t"])
     assert df.select(tokens("t").alias("tk")).collect()[0].tk == ["a", "b", "c"]
+
+
+def test_tokens_and_duckdb_twin_agree_on_vertical_tab(spark):
+    """Java's ``\\s`` (``tokens``) includes ``\\x0B``, RE2's does not:
+    ``WS_RE2`` adds it, so both engines split ``'a\\x0bb c'`` alike."""
+    import duckdb
+
+    text = "a\x0bb c"
+    df = spark.createDataFrame([(text,)], ["t"])
+    spark_toks = df.select(tokens("t").alias("tk")).collect()[0].tk
+    duck_toks = duckdb.sql(
+        f"SELECT string_split_regex($t, '{WS_RE2}')", params={"t": text}
+    ).fetchone()[0]
+    assert spark_toks == duck_toks == ["a", "b", "c"]
 
 
 # ------------------------------------------------- money overflow guard

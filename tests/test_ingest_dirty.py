@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 from decimal import Decimal
+from pathlib import Path
 
 import pytest
 
@@ -15,14 +16,25 @@ from hadoop_hive_analysis_spark.plans.reference_queries import (
     q1a_top_stores_by_profit,
     q2_store_profit_employees,
 )
-from hadoop_hive_analysis_spark.sources.csv import read_store, read_store_sales
+from hadoop_hive_analysis_spark.schemas import STORE_SALES
+from hadoop_hive_analysis_spark.sources.csv import (
+    _MAX_LISTED,
+    _no_file_splits,
+    _pipe_reader,
+    read_pipe_table,
+    read_store,
+    read_store_sales,
+)
 from hadoop_hive_analysis_spark.sources.sinks import write_tab_text
+from perfbench.oracle import Oracle
 
 
-def _sales_line(date_sk, store_sk, profit, item_sk=1, qty=2):
-    """One 23-field pipe row; only the queried positions carry real values."""
+def _sales_line(date_sk, store_sk, profit, item_sk=1, qty=2, time_sk=""):
+    """One 23-field pipe row; only the queried positions carry real values
+    (and ``time_sk``, field 1, which no query reads)."""
     f = [""] * 23
     f[0] = str(date_sk)
+    f[1] = str(time_sk)
     f[2] = str(item_sk)
     f[7] = str(store_sk)
     f[10] = str(qty)
@@ -47,6 +59,9 @@ def fixture_paths(tmp_path_factory):
         _sales_line(2451003, 3, "100.00"),
         _sales_line(2449999, 1, "999.99"),  # outside date range → filtered
         _sales_line(2453000, 2, "999.99"),  # outside date range → filtered
+        # A stray quote is data, as in Hive and DuckDB (quote=''); with
+        # Spark's default quote it swallowed the rest of the line.
+        _sales_line(2451000, 2, "1.00", time_sk='"a'),
     ]
     dirty = [
         _sales_line(2451000, "", "7.77"),  # class 1: empty key attribute
@@ -68,7 +83,7 @@ def fixture_paths(tmp_path_factory):
 def test_dirty_rows_become_nulls_not_errors(spark, fixture_paths):
     sales_path, _ = fixture_paths
     df = read_store_sales(spark, sales_path)
-    assert df.count() == 10  # nothing crashes; all physical lines surface
+    assert df.count() == 11  # nothing crashes; all physical lines surface
     bad_key = df.filter("ss_store_sk IS NULL").count()
     assert bad_key == 2  # empty attribute + short row
     assert df.filter("ss_net_profit IS NULL").count() >= 2
@@ -81,7 +96,7 @@ def test_q1a_native_drops_dirty_and_sums_exactly(spark, fixture_paths):
     got = {r.ss_store_sk: r.net_profit for r in out.collect()}
     assert got == {
         1: Decimal("15.75"),
-        2: Decimal("-3.00"),
+        2: Decimal("-2.00"),
         3: Decimal("100.00"),
     }
     # ordering: desc by profit
@@ -105,7 +120,7 @@ def test_q2_native_rightouter_coalesce_and_null_exclusion(spark, fixture_paths):
     rows = [(r.s_store_sk, r.net_profit, r.s_number_employees) for r in out.collect()]
     assert rows == [
         (1, Decimal("15.75"), 11),
-        (2, Decimal("-3.00"), 22),
+        (2, Decimal("-2.00"), 22),
         # store 3 excluded: NULL employees (reference :152,:185)
         (4, Decimal("0.00"), 44),  # no sales → COALESCE → 0
     ]
@@ -122,7 +137,7 @@ def test_tab_text_sink_roundtrip(spark, fixture_paths, tmp_path):
         if fn.startswith("part-"):
             with open(os.path.join(dest, fn)) as fh:
                 lines += [l.rstrip("\n") for l in fh if l.strip()]
-    assert sorted(lines) == sorted(["3\t100.00", "1\t15.75", "2\t-3.00"])
+    assert sorted(lines) == sorted(["3\t100.00", "1\t15.75", "2\t-2.00"])
 
 
 def test_all_native_sql_duals_match_dataframe(spark, fixture_paths):
@@ -204,7 +219,7 @@ def test_observation_metrics_ride_the_query_job(spark, fixture_paths):
     out = q1a_top_stores_by_profit(observed, 10, 2450000, 2452000)
     assert out.count() == 3  # the action the metrics ride on
     m = obs.get
-    assert m["n_rows"] == 10
+    assert m["n_rows"] == 11
     assert m["null_ss_store_sk"] == 2  # empty attr + short row
     assert m["null_ss_net_profit"] >= 2  # unparsable numeric + short row
     assert m["null_ss_sold_date_sk"] == 1  # unparsable date
@@ -212,4 +227,183 @@ def test_observation_metrics_ride_the_query_job(spark, fixture_paths):
     report = ingest_quality_report(
         df, ["ss_store_sk", "ss_net_profit"]
     ).collect()[0]
-    assert report.n_rows == 10 and report.null_ss_store_sk == 2
+    assert report.n_rows == 11 and report.null_ss_store_sk == 2
+
+
+# ---------------------------------------------- line reader vs. streaming
+
+# The columns the reference's queries read, typed as perfbench's oracle
+# reads them from the same text.
+_QUERIED = {
+    0: ("ss_sold_date_sk", "BIGINT"),
+    2: ("ss_item_sk", "BIGINT"),
+    7: ("ss_store_sk", "BIGINT"),
+    10: ("ss_quantity", "INTEGER"),
+    22: ("ss_net_profit", "DECIMAL(7,2)"),
+}
+
+_GOOD = [
+    _sales_line(2451000, 1, "10.50"),
+    _sales_line(2451001, 2, "5.25", item_sk=7),
+    _sales_line(2451002, 3, "-3.00", qty=9),
+]
+_DIRTY = [
+    _sales_line(2451000, "", "7.77"),
+    _sales_line(2451000, 1, "abc"),
+    "2451000|x|y",
+]
+_QUOTED = [
+    _sales_line(2451000, 2, "1.00", time_sk='"a'),
+    _sales_line(2451003, 1, '"2.00"'),
+    _sales_line(2451004, 1, "3.00", time_sk='a"b"'),
+    _sales_line('"', 3, "4.00"),
+]
+
+
+def _write_parts(d, files: list[str]) -> str:
+    d.mkdir()
+    for i, text in enumerate(files):
+        (d / f"part-{i:05d}.dat").write_bytes(text.encode())
+    return str(d)
+
+
+def _rows(df) -> list[tuple]:
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def _queried(df) -> list[tuple]:
+    return _rows(df.select(*(name for name, _ in _QUERIED.values())))
+
+
+def _line_reader(spark, path):
+    return _pipe_reader(spark, STORE_SALES, "|").csv(path)
+
+
+def _stream_reader(spark, path):
+    return _pipe_reader(spark, STORE_SALES, "|").option("multiLine", "true").csv(path)
+
+
+def _oracle_rows(path: str) -> list[tuple]:
+    """DuckDB's rows for the text file or part directory ``path``."""
+    files = sorted(map(str, Path(path).glob("part-*"))) if os.path.isdir(path) else [path]
+    o = Oracle()
+    try:
+        o.pipe_text_view("t", files, _QUERIED, 23)
+        return sorted(o.con.execute("SELECT * FROM t").fetchall(), key=repr)
+    finally:
+        o.close()
+
+
+_READER_FIXTURES = {
+    "lf": ["\n".join(_GOOD) + "\n"],
+    "crlf": ["\r\n".join(_GOOD) + "\r\n"],
+    "lf_and_crlf_files": ["\n".join(_GOOD) + "\n", "\r\n".join(_DIRTY) + "\r\n"],
+    "no_final_newline": ["\n".join(_GOOD)],
+    "empty_lines": ["\n" + "\n\n".join(_GOOD) + "\n\n\n"],
+    "dirty_classes": ["\n".join(_GOOD + _DIRTY) + "\n"],
+    "stray_quotes": ["\n".join(_GOOD + _QUOTED) + "\n"],
+}
+
+
+@pytest.mark.parametrize("name", sorted(_READER_FIXTURES))
+def test_streaming_and_line_reader_agree(spark, tmp_path, name):
+    """On inputs inside the contract (each file's lines end one way),
+    ``read_pipe_table`` streams small files, and the streaming reader gives
+    the line reader's rows and partitions; both give DuckDB's rows."""
+    path = _write_parts(tmp_path / name, _READER_FIXTURES[name])
+    assert _no_file_splits(spark, path)
+    chosen, line = read_pipe_table(spark, path, STORE_SALES), _line_reader(spark, path)
+    assert _rows(chosen) == _rows(line)
+    assert chosen.rdd.getNumPartitions() == line.rdd.getNumPartitions()
+    assert _queried(chosen) == _oracle_rows(path)
+
+
+@pytest.fixture
+def max_partition_bytes(spark):
+    """Set ``spark.sql.files.maxPartitionBytes`` for one test, then restore it."""
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key, None)
+    yield lambda n: spark.conf.set(key, str(n))
+    if prev is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, prev)
+
+
+def test_file_larger_than_a_split_keeps_the_line_reader(spark, tmp_path, max_partition_bytes):
+    """The path rule is Spark's split size: a file of exactly
+    ``maxSplitBytes`` is one split and streams; one byte less and the file
+    is cut in two, so it keeps the line reader; at a quarter it splits
+    four ways. Both readers give the same rows throughout."""
+    lines = [_sales_line(2451000 + i % 7, i % 5, f"{i}.25") for i in range(200)]
+    path = _write_parts(tmp_path / "big", ["\n".join(lines) + "\n"])
+    size = (tmp_path / "big" / "part-00000.dat").stat().st_size
+    expected = _rows(_line_reader(spark, path))
+    assert len(expected) == 200
+    cases = [(size, True, 1), (size - 1, False, 2), (size // 4 + 1, False, 4)]
+    for split, streams, n_parts in cases:
+        max_partition_bytes(split)
+        assert _no_file_splits(spark, path) is streams, split
+        chosen, line = read_store_sales(spark, path), _line_reader(spark, path)
+        assert chosen.rdd.getNumPartitions() == line.rdd.getNumPartitions() == n_parts
+        assert _rows(chosen) == expected
+
+
+def test_line_reader_kept_for_globs_subdirs_empty_and_long_listings(spark, tmp_path):
+    """Also for a listing longer than ``_MAX_LISTED``, whose files are
+    read on the line reader without being examined."""
+    many = _write_parts(tmp_path / "many", [_GOOD[0] + "\n"] * (_MAX_LISTED + 1))
+    assert not _no_file_splits(spark, many)
+    assert read_store_sales(spark, many).count() == _MAX_LISTED + 1
+    at_cap = _write_parts(tmp_path / "cap", [_GOOD[0] + "\n"] * _MAX_LISTED)
+    assert _no_file_splits(spark, at_cap)
+    path = _write_parts(tmp_path / "t", ["\n".join(_GOOD) + "\n"])
+    (tmp_path / "t" / "_SUCCESS").write_text("")
+    (tmp_path / "t" / ".part-00000.dat.crc").write_text("x" * 100)
+    assert _no_file_splits(spark, path)  # hidden files are skipped, as by Spark
+    assert not _no_file_splits(spark, path + "/part-*")
+    assert not _no_file_splits(spark, str(tmp_path))  # a subdirectory
+    (tmp_path / "empty").mkdir()
+    assert not _no_file_splits(spark, str(tmp_path / "empty"))
+    assert not _no_file_splits(spark, str(tmp_path / "missing"))
+
+
+def test_mixed_line_terminators_are_outside_the_contract(spark, tmp_path):
+    """Pinned: the streaming reader takes a file's terminator from its
+    first line. After an LF first line, a CRLF line's last field keeps its
+    ``\\r`` (profit NULL); after a CRLF first line, the LF lines merge
+    into one row. The line reader and DuckDB read both files right."""
+    six = [_sales_line(2451000 + i, i, f"{i}.50") for i in range(6)]
+    cases = {
+        "lf_first": "\n".join(six[:3]) + "\n" + "\r\n".join(six[3:]) + "\r\n",
+        "crlf_first": "\r\n".join(six[:3]) + "\r\n" + "\n".join(six[3:]) + "\n",
+    }
+    got = {}
+    for name, text in cases.items():
+        path = _write_parts(tmp_path / name, [text])
+        assert _queried(_line_reader(spark, path)) == _oracle_rows(path)
+        assert len(_oracle_rows(path)) == 6
+        chosen = _queried(read_store_sales(spark, path))
+        assert chosen == _queried(_stream_reader(spark, path))
+        got[name] = (len(chosen), sum(r[4] is None for r in chosen))
+    # (rows, rows with a NULL profit): after LF, the three CRLF lines lose
+    # their profit; after CRLF, the three LF lines become one row.
+    assert got == {"lf_first": (6, 3), "crlf_first": (4, 1)}
+
+
+def test_whitespace_only_lines_differ_the_other_way(spark, tmp_path):
+    """Pinned: a whitespace-only line is an all-NULL row to the streaming
+    reader, as to DuckDB's ``read_csv``; the line reader drops it."""
+    path = _write_parts(tmp_path / "ws", [_GOOD[0] + "\n   \n" + _GOOD[1] + "\n\t\n"])
+    chosen = _queried(read_store_sales(spark, path))
+    assert chosen == _oracle_rows(path)
+    assert chosen.count((None,) * 5) == 2 and len(chosen) == 4
+    assert _queried(_line_reader(spark, path)) == [r for r in chosen if r != (None,) * 5]
+
+
+def test_stray_quote_row_matches_duckdb(spark, fixture_paths):
+    """The dirty fixture, quote row included, parses as DuckDB reads it."""
+    sales_path, _ = fixture_paths
+    got = _queried(read_store_sales(spark, sales_path))
+    assert (2451000, 1, 2, 2, Decimal("1.00")) in got
+    assert got == _oracle_rows(sales_path)

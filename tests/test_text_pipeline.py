@@ -7,6 +7,7 @@ from __future__ import annotations
 import duckdb
 from pyspark.sql import functions as F
 
+from hadoop_hive_analysis_spark.functions.text import WS_RE2
 from hadoop_hive_analysis_spark.operators.text_pipeline import (
     CHUNK_SIZE,
     CHUNK_STRIDE,
@@ -943,7 +944,7 @@ def test_corpus_budget_select_invariants(spark, sf_dir):
 
     con = duckdb.connect()
     total = con.execute(
-        rf"""SELECT CAST(sum(len(string_split_regex(text, '\s+'))) AS BIGINT)
+        rf"""SELECT CAST(sum(len(string_split_regex(text, '{WS_RE2}'))) AS BIGINT)
              FROM read_parquet('{sf_dir}/documents.parquet')"""
     ).fetchone()[0]
     budget = total * BUDGET_PPM // 1_000_000
@@ -954,7 +955,7 @@ def test_corpus_budget_select_invariants(spark, sf_dir):
     min_sel_bin = min(r["qbin"] for r in rows)
     all_docs = con.execute(
         rf"""SELECT doc_id,
-                    CAST(len(string_split_regex(text, '\s+')) AS BIGINT)
+                    CAST(len(string_split_regex(text, '{WS_RE2}')) AS BIGINT)
              FROM read_parquet('{sf_dir}/documents.parquet')"""
     ).fetchall()
     con.close()
